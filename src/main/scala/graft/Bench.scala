@@ -133,12 +133,8 @@ object Bench {
     import spark.implicits._
     val pages = spark.read.parquet(path).as[graft.corpus.Page]
     val t0 = System.nanoTime()
-    // GRAFT_DL_BROADCAST_MAX=0 forces the dl-carrying (fat) exchange — the
-    // A/B knob for measuring what the slim exchange is worth on one box
-    val dlMax = sys.env.get("GRAFT_DL_BROADCAST_MAX").map(_.toLong)
-      .getOrElse(IndexConfig().dlBroadcastMaxDocs)
-    new IndexBuilder(spark, root, IndexConfig(partitions = partitions,
-      dlBroadcastMaxDocs = dlMax)).build(pages)
+    new IndexBuilder(spark, root, IndexConfig(partitions = partitions))
+      .build(pages)
     val buildSec = (System.nanoTime() - t0) / 1e9
 
     val engine = new QueryEngine(spark, root)

@@ -28,7 +28,7 @@ object LevelBench {
     // levels of a pair, so it biases the efficiency ratio toward the
     // constant's share of wall — and at the criterion's real scale (10^12
     // docs) it is zero. warm=1 reports the steady-state leg, the same
-    // discipline the query windows (and ExchangeAb) have always used.
+    // discipline the query windows have always used.
     val warmBuilds = args.lift(2).map(_.toInt).getOrElse(0)
 
     SparkSession.clearActiveSession()

@@ -45,8 +45,7 @@ final case class StepInfo(
   * count. At 100 TB a postings table is O(10^5-10^6) files; without
   * sharding every commit rewrote and every reader parsed a hundreds-of-MB
   * JSON. Readers resolve refs through a process-wide content-addressed
-  * cache (immutable by construction). Old snapshots with inline `files`
-  * arrays remain readable (legacy format). Manifest side files referenced
+  * cache (immutable by construction). Manifest side files referenced
   * by NO snapshot (crashed commits) are cleaned by [[expireSnapshots]] only
   * when an expired snapshot referenced them and no survivor does — an
   * in-flight commit's freshly written manifest (referenced by nothing yet)
@@ -59,6 +58,9 @@ final class IceTable(val root: String, conf: Configuration) {
   import IceTable.manifestCache
 
   def tablePath(name: String): String = s"$root/data/$name"
+
+  /** Working directory of one build or batch, outside every table. */
+  def scratchPath(name: String): String = s"$root/scratch/$name"
 
   // --- snapshot log ---------------------------------------------------------
 
@@ -121,18 +123,11 @@ final class IceTable(val root: String, conf: Configuration) {
     out
   }
 
-  /** File list of one snapshot step node: sharded (`filesRef` → manifest
-    * side file, content-addressed cache) or legacy inline `files`.
+  /** File list of one snapshot step node (`filesRef` → manifest side file,
+    * content-addressed cache).
     */
-  private def stepFiles(s: JsonNode): Seq[(String, Long)] = {
-    val inline = s.get("files")
-    if (inline != null) {
-      val files = Vector.newBuilder[(String, Long)]
-      inline.forEach(f =>
-        files += ((f.get("name").asText(), f.get("rows").asLong())))
-      files.result()
-    } else readManifest(s.get("filesRef").asText())
-  }
+  private def stepFiles(s: JsonNode): Seq[(String, Long)] =
+    readManifest(s.get("filesRef").asText())
 
   private def manifestPath(hash: String): Path =
     new Path(root, s"manifests/manifest-$hash.json")
@@ -448,10 +443,7 @@ final class IceTable(val root: String, conf: Configuration) {
         val in = fs.open(p)
         val node = try mapper.readTree(in) finally in.close()
         val refs = Set.newBuilder[String]
-        node.get("steps").forEach { s =>
-          val r = s.get("filesRef")
-          if (r != null) refs += r.asText()
-        }
+        node.get("steps").forEach(s => refs += s.get("filesRef").asText())
         refs.result()
       }
     }

@@ -1,7 +1,10 @@
 package graft.index
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.corpus.Page
 import graft.krep.{functions => K}
@@ -52,11 +55,7 @@ final case class IndexConfig(
     docsPerSegment: Long = 1L << 16,
     partitions: Int = 32,
     // dict rows under this → broadcast hash join into postings build
-    dictBroadcastThreshold: Long = 2000000L,
-    // docs under this → dl travels to the block encoders as one broadcast
-    // Int per doc (16M docs = 64 MB) and the postings exchange drops its
-    // tf AND dl columns; above it, dl rides the exchange as before
-    dlBroadcastMaxDocs: Long = 16000000L)
+    dictBroadcastThreshold: Long = 2000000L)
 
 final case class IndexStats(n: Long, avgdl: Double)
 
@@ -70,10 +69,11 @@ final case class IndexStats(n: Long, avgdl: Double)
   *  - tf is computed PER ROW by `krep_term_freqs` (one custom expression),
   *    so the only wide exchange moves one row per (doc, distinct term), not
   *    one per token.
-  *  - hot-term skew ("the" at 10^12 docs) is defused by range-partitioning
-  *    postings on (termId, docId): the range partitioner splits a hot term
-  *    across many partitions at docId boundaries, each bounded, and blocks
-  *    stay globally sorted runs — no salt bookkeeping, no merge pass.
+  *  - hot-term skew ("the" at 10^12 docs) is defused by hash-partitioning
+  *    postings on (termId, docId segment): a hot term's postings split
+  *    across segments, each partition bounded, and blocks never span a
+  *    segment, so per-term blocks stay globally mergeable sorted runs — no
+  *    salt bookkeeping, no sampling pass, no merge pass.
   *  - the postings files are written sorted by (termId, docId), so a query
   *    for a handful of terms prunes row groups via parquet min/max on termId.
   */
@@ -81,6 +81,7 @@ final class IndexBuilder(spark: SparkSession, root: String,
     cfg: IndexConfig = IndexConfig()) {
 
   import spark.implicits._
+  import IndexBuilder._
 
   val ice = new IceTable(root, spark.sparkContext.hadoopConfiguration)
 
@@ -96,15 +97,17 @@ final class IndexBuilder(spark: SparkSession, root: String,
     val done = ice.completedSteps.keySet
     val ran = Seq.newBuilder[String]
 
-    def step(name: String, metrics: => Map[String, String])(body: => Unit): Unit = {
+    // `metrics` receives the step's committed row count
+    def step(name: String, metrics: Long => Map[String, String] = _ => Map.empty)
+        (body: => Unit): Unit = {
       if (!done.contains(name)) {
         val t0 = System.nanoTime()
         body
         val secs = (System.nanoTime() - t0) / 1e9
         val lineage = ice.parquetLineage(name)
-        ice.commitStep(StepInfo(name, ice.tablePath(name),
-          lineage.map(_._2).sum, lineage,
-          metrics + ("elapsedSec" -> f"$secs%.3f")))
+        val rows = lineage.map(_._2).sum
+        ice.commitStep(StepInfo(name, ice.tablePath(name), rows, lineage,
+          metrics(rows) + ("elapsedSec" -> f"$secs%.3f")))
         ran += name
         if (failAfter.contains(name))
           throw new RuntimeException(s"injected failure after step $name")
@@ -114,117 +117,51 @@ final class IndexBuilder(spark: SparkSession, root: String,
     // canonical snapshot of the input with dense docIds assigned — one
     // range-shuffle on url, read by every later step (no re-tokenize of the
     // raw input, no url joins downstream)
-    step("corpus", Map("orderedBy" -> "url")) {
-      val ranked = Ranker.denseIdsByKey(
-        pages.select($"url", $"text"), "url", "docId", cfg.partitions)
-      write(ranked.select($"docId", $"url",
-        K.krep_token_count($"text").as("dl"), $"text"), "corpus")
+    step("corpus", _ => Map("orderedBy" -> "url")) {
+      write(corpusRows(Ranker.denseIdsByKey(
+        pages.select($"url", $"text"), "url", "docId", cfg.partitions)),
+        "corpus")
     }
 
-    step("docs", Map.empty) {
-      write(ice.readTable(spark, "corpus")
-        .select($"docId", $"url", $"dl"), "docs")
+    step("docs") {
+      write(docRows(ice.readTable(spark, "corpus")), "docs")
     }
 
-    step("stats", {
+    step("stats", _ => {
       val s = loadStats()
       Map("n" -> s.n.toString, "avgdl" -> s.avgdl.toString)
     }) {
-      val docs = ice.readTable(spark, "docs")
-      write(docs.agg(count("*").as("n"),
-        coalesce(avg("dl"), lit(0.0)).as("avgdl")), "stats")
+      write(statsRow(ice.readTable(spark, "docs")), "stats")
     }
 
-    step("tfrows", Map.empty) {
-      val corpus = ice.readTable(spark, "corpus")
-      // positions leave the tokenizer already delta-varint packed (posv
-      // BINARY): the widest column of the widest table — and of the postings
-      // exchange downstream — is a compact strip instead of an ARRAY<INT>,
-      // and block encoding later concatenates strips without re-coding
-      write(corpus
-        .select($"docId", $"dl",
-          explode(K.krep_term_positions_packed($"text")).as("t"))
-        .select($"docId", $"t.term".as("term"),
-          $"t.tf".as("tf"), $"dl", $"t.posv".as("posv")),
-        "tfrows")
+    step("tfrows") {
+      write(tfRows(ice.readTable(spark, "corpus")), "tfrows")
     }
 
-    step("dict", Map("orderedBy" -> "term")) {
-      val tfr = ice.readTable(spark, "tfrows")
+    // termIds are dense from 0, so the next free id is the row count
+    step("dict", rows => Map("orderedBy" -> "term",
+        NextTermId -> rows.toString)) {
       // persisted because the ranker's range partitioner SAMPLES its input
       // before shuffling it: without the persist the sample pass re-executes
       // the whole tfrows scan + aggregation a second time (measured ~40% of
       // the step at 50k docs)
-      val grouped = tfr.groupBy($"term")
-        .agg(count("*").as("df"), sum($"tf").as("cf"))
+      val grouped = termCounts(ice.readTable(spark, "tfrows"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try write(Ranker.denseIdsByKey(grouped, "term", "termId", cfg.partitions)
         .select($"termId", $"term", $"df", $"cf"), "dict")
       finally grouped.unpersist(false)
     }
 
-    // beyond the dl-broadcast gate, dl reaches the block encoders through a
-    // per-segment doc-values sidecar (seg-<id>.bin, one dense Int per doc)
-    // written and committed as its own resumable step — so the slim postings
-    // exchange applies at ANY corpus size instead of falling back to
-    // carrying dl through the widest shuffle (the fat exchange the A/B
-    // measured at ~9-11% of build wall)
-    val nDocsForPostings = ice.completedSteps.get("docs").map(_.rowCount)
-    if (nDocsForPostings.exists(_ > cfg.dlBroadcastMaxDocs) &&
-        !done.contains("dlseg") && !done.contains("postings")) {
-      val t0 = System.nanoTime()
-      val files = IndexBuilder.writeDlSidecar(
-        ice.readTable(spark, "docs").select($"docId", $"dl"),
-        ice.tablePath("dlseg"), cfg.docsPerSegment, cfg.partitions)
-      ice.commitStep(StepInfo("dlseg", ice.tablePath("dlseg"),
-        files.map(_._2).sum, files,
-        Map("docsPerSegment" -> cfg.docsPerSegment.toString,
-          "elapsedSec" -> f"${(System.nanoTime() - t0) / 1e9}%.3f")))
-      ran += "dlseg"
-      if (failAfter.contains("dlseg"))
-        throw new RuntimeException("injected failure after step dlseg")
-    }
-
-    step("postings", Map(
+    step("postings", _ => Map(
       "blockSize" -> cfg.blockSize.toString,
       "docsPerSegment" -> cfg.docsPerSegment.toString)) {
-      val tfr = ice.readTable(spark, "tfrows")
-      val dictDf = ice.readTable(spark, "dict")
-        .select($"termId", $"term")
-      // row count comes from the committed dict lineage — no extra job
-      val dictRows = ice.completedSteps("dict").rowCount
-      val dictJ =
-        if (dictRows <= cfg.dictBroadcastThreshold) broadcast(dictDf) else dictDf
-
-      // hash-partition on (termId, segment): skew-proof by construction — a
-      // hot term's postings split across segments, each partition bounded by
-      // (terms-per-segment × docsPerSegment); unlike repartitionByRange this
-      // needs no sampling pass over the joined input. Blocks never span
-      // segments, so per-term blocks stay globally mergeable sorted runs.
-      val nDocs = ice.completedSteps("docs").rowCount
-      // the exchange is ALWAYS slim — (termId, docId, posv), the minimum
-      // that determines the blocks; tf re-derives from the posv varint
-      // count, dl from a broadcast dense table below the gate or from the
-      // per-segment sidecar above it
-      val rows = tfr.join(dictJ, "term")
-        .select($"termId", $"docId", $"posv")
-        .as[(Long, Long, Array[Byte])]
-        .repartition(cfg.partitions, $"termId",
-          floor($"docId" / cfg.docsPerSegment))
-        .sortWithinPartitions($"termId", $"docId")
-      val blocks = if (nDocs <= cfg.dlBroadcastMaxDocs) {
-        val dlArr = new Array[Int](nDocs.toInt)
-        ice.readTable(spark, "docs")
-          .select($"docId", $"dl".cast("int")).as[(Long, Int)]
-          .collect().foreach { case (d, l) => dlArr(d.toInt) = l }
-        val dlt = spark.sparkContext.broadcast(IndexBuilder.DlTable(0L, dlArr))
-        IndexBuilder.encodeBlocksSlim(rows, dlt, cfg.blockSize,
-          cfg.docsPerSegment)
-      } else {
-        IndexBuilder.encodeBlocksSlimSidecar(rows, ice.tablePath("dlseg"),
-          cfg.blockSize, cfg.docsPerSegment)
-      }
-      write(blocks.toDF(), "postings")
+      // dict row count comes from the committed dict lineage — no extra job
+      writePostings(ice.readTable(spark, "tfrows"),
+        ice.readTable(spark, "dict").select($"termId", $"term"),
+        ice.completedSteps("dict").rowCount, ice.readTable(spark, "docs"),
+        ice.tablePath("postings"),
+        ice.scratchPath(s"dl-${java.util.UUID.randomUUID().toString.take(8)}"),
+        cfg)
     }
 
     ran.result()
@@ -239,75 +176,138 @@ final class IndexBuilder(spark: SparkSession, root: String,
 }
 
 object IndexBuilder {
-  /** Dense-docId → doc length lookup, broadcast to the block encoders so the
-    * build's widest exchange does not have to carry a `dl` column at all.
-    * docIds are dense from `base` (0 for the batch build; the committed doc
-    * count for a streaming delta), so the table is one Int per doc — 4 MB
-    * per million docs. [[IndexConfig.dlBroadcastMaxDocs]] gates the size; a
-    * corpus beyond it reads dl from the committed per-segment doc-values
-    * sidecar instead ([[writeDlSidecar]] / [[encodeBlocksSlimSidecar]]), so
-    * the exchange stays slim at any corpus size.
+  /** Dict step metric: the next unassigned termId (max termId + 1). Appends
+    * assign new terms from it; it survives [[IndexCompactor.compactDictionary]],
+    * which shrinks the row count but keeps the ids.
     */
-  final case class DlTable(base: Long, dls: Array[Int]) {
-    def apply(docId: Long): Int = dls((docId - base).toInt)
+  val NextTermId = "nextTermId"
+
+  // --- step expressions shared by the batch build, the empty bootstrap and
+  // --- the streaming append
+
+  /** corpus row: (docId, url, dl, text) from rows carrying docId, url, text. */
+  def corpusRows(withIds: DataFrame): DataFrame =
+    withIds.select(col("docId"), col("url"),
+      K.krep_token_count(col("text")).as("dl"), col("text"))
+
+  /** docs row: (docId, url, dl). */
+  def docRows(corpus: DataFrame): DataFrame =
+    corpus.select(col("docId"), col("url"), col("dl"))
+
+  /** tfrows row: (docId, term, tf, posv). Positions leave the tokenizer
+    * already delta-varint packed (posv BINARY): the widest column of the
+    * widest table — and of the postings exchange downstream — is a compact
+    * strip instead of an ARRAY<INT>, and block encoding later concatenates
+    * strips without re-coding.
+    */
+  def tfRows(corpus: DataFrame): DataFrame =
+    corpus.select(col("docId"),
+        explode(K.krep_term_positions_packed(col("text"))).as("t"))
+      .select(col("docId"), col("t.term").as("term"), col("t.tf").as("tf"),
+        col("t.posv").as("posv"))
+
+  /** stats row: (n, avgdl) over a `dl` column. */
+  def statsRow(dls: DataFrame): DataFrame =
+    dls.agg(count(lit(1)).as("n"), coalesce(avg(col("dl")), lit(0.0)).as("avgdl"))
+
+  /** Per-term counts (term, df, cf) of tfrows. */
+  def termCounts(tfrows: DataFrame): DataFrame =
+    tfrows.groupBy(col("term"))
+      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
+
+  /** The one write path of fresh postings (batch build and streaming
+    * append): write `docs`' (docId, dl) into a per-segment sidecar under
+    * `scratch`, encode `tfrows` ⋈ `dict` into blocks at `out`, delete the
+    * sidecar. `dictRows` gates the broadcast of `dict`.
+    */
+  def writePostings(tfrows: DataFrame, dict: DataFrame, dictRows: Long,
+      docs: DataFrame, out: String, scratch: String, cfg: IndexConfig): Unit = {
+    val conf = new SerializableConfiguration(
+      docs.sparkSession.sparkContext.hadoopConfiguration)
+    writeDlSidecar(docs, scratch, cfg, conf)
+    try postingBlocks(tfrows, dict, dictRows, scratch, cfg, conf).toDF()
+      .write.mode(SaveMode.Overwrite).parquet(out)
+    finally new Path(scratch).getFileSystem(conf.value)
+      .delete(new Path(scratch), true)
+  }
+
+  /** Blocks of `tfrows` ⋈ `dict`, dl read from the sidecar at `dlDir`.
+    *
+    * The one wide exchange moves (termId, docId, posv) — the minimum that
+    * determines the blocks: tf re-derives from the strip's varint count
+    * (one varint per position by construction — [[BlockCodec.packPositions]])
+    * and dl from the sidecar, read by the encoder's own partition. It
+    * hash-partitions on (termId, segment): skew-proof by construction — a
+    * hot term's postings split across segments, each partition bounded by
+    * (terms-per-segment × docsPerSegment) — and, unlike repartitionByRange,
+    * needs no sampling pass over the joined input. Byte-identical blocks to
+    * [[encodeBlocks]] over the dl-carrying rows (SlimExchangeSpec).
+    */
+  private[graft] def postingBlocks(tfrows: DataFrame, dict: DataFrame,
+      dictRows: Long, dlDir: String, cfg: IndexConfig,
+      conf: SerializableConfiguration): Dataset[PosPostingBlock] = {
+    import tfrows.sparkSession.implicits._
+    val dictJ = if (dictRows <= cfg.dictBroadcastThreshold) broadcast(dict) else dict
+    val dps = cfg.docsPerSegment
+    val blockSize = cfg.blockSize
+    tfrows.join(dictJ, "term")
+      .select($"termId", $"docId", $"posv")
+      .as[(Long, Long, Array[Byte])]
+      .repartition(cfg.partitions, $"termId", floor($"docId" / dps))
+      .sortWithinPartitions($"termId", $"docId")
+      .mapPartitions { it =>
+        val reader = new DlSegReader(dlDir, dps, conf.value)
+        blockIterator(it.map { case (termId, docId, posv) =>
+          (termId, docId, BlockCodec.countVarints(posv), reader.dl(docId), posv)
+        }, blockSize, dps)
+      }
   }
 
   /** Encode (termId, docId, tf, dl, packedPositions) rows — sorted by
     * (termId, docId) within partitions, blocks never spanning a docId
     * segment — into compressed posting blocks. Position strips arrive
     * already packed ([[BlockCodec.packPositions]]); a block's `poss` is
-    * their concatenation, byte-identical to encoding the int lists. Shared
-    * by the batch build and the streaming appender.
+    * their concatenation, byte-identical to encoding the int lists. The
+    * compaction encoder, whose rows decode from committed blocks.
     */
-  def encodeBlocks(
-      rows: org.apache.spark.sql.Dataset[(Long, Long, Int, Int, Array[Byte])],
-      blockSize: Int, docsPerSegment: Long)
-      : org.apache.spark.sql.Dataset[PosPostingBlock] = {
+  def encodeBlocks(rows: Dataset[(Long, Long, Int, Int, Array[Byte])],
+      blockSize: Int, docsPerSegment: Long): Dataset[PosPostingBlock] = {
     import rows.sparkSession.implicits._
     rows.mapPartitions(it => blockIterator(it, blockSize, docsPerSegment))
   }
 
   /** Write the per-segment dl sidecar: one `seg-<segId>.bin` per docId
-    * segment, 4-byte big-endian dl values indexed by (docId − seg·dps) —
-    * docIds are dense, so every slot is written. Hash-partitioned by
-    * segment so each task owns whole segments; returns (fileName, docs)
-    * lineage for the step commit. Task retries rewrite the same
-    * deterministic bytes (create-overwrite), so speculative execution is
-    * safe.
+    * segment, 4-byte big-endian dl values indexed by (docId − seg·dps).
+    * Slots of docIds not in `docs` (an append starting mid-segment) stay 0
+    * and are never read. Hash-partitioned by segment so each task owns
+    * whole segments; task retries rewrite the same deterministic bytes
+    * (create-overwrite), so speculative execution is safe.
     */
-  def writeDlSidecar(docs: org.apache.spark.sql.DataFrame, dir: String,
-      docsPerSegment: Long, partitions: Int): Seq[(String, Long)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.floor
+  private def writeDlSidecar(docs: DataFrame, dir: String, cfg: IndexConfig,
+      conf: SerializableConfiguration): Unit = {
+    import docs.sparkSession.implicits._
+    val dps = cfg.docsPerSegment
     docs.select($"docId", $"dl".cast("int"))
-      .repartition(partitions, floor($"docId" / docsPerSegment))
+      .repartition(cfg.partitions, floor($"docId" / dps))
       .as[(Long, Int)]
-      .mapPartitions { it =>
+      .foreachPartition { (it: Iterator[(Long, Int)]) =>
         val bySeg = scala.collection.mutable.HashMap
           .empty[Long, scala.collection.mutable.ArrayBuffer[(Int, Int)]]
         it.foreach { case (docId, dl) =>
-          val seg = docId / docsPerSegment
+          val seg = docId / dps
           bySeg.getOrElseUpdate(seg,
             scala.collection.mutable.ArrayBuffer.empty) +=
-            (((docId - seg * docsPerSegment).toInt, dl))
+            (((docId - seg * dps).toInt, dl))
         }
-        val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-          new org.apache.hadoop.conf.Configuration())
-        bySeg.iterator.map { case (seg, offs) =>
+        val fs = new Path(dir).getFileSystem(conf.value)
+        bySeg.foreach { case (seg, offs) =>
           val size = offs.iterator.map(_._1).max + 1
-          val arr = new Array[Int](size)
-          offs.foreach { case (off, dl) => arr(off) = dl }
           val bytes = java.nio.ByteBuffer.allocate(4 * size)
-          arr.foreach(bytes.putInt)
-          val name = s"seg-$seg.bin"
-          val out = fs.create(
-            new org.apache.hadoop.fs.Path(dir, name), true)
+          offs.foreach { case (off, dl) => bytes.putInt(4 * off, dl) }
+          val out = fs.create(new Path(dir, s"seg-$seg.bin"), true)
           try out.write(bytes.array()) finally out.close()
-          (name, offs.length.toLong)
         }
       }
-      .collect().toSeq.sortBy(_._1)
   }
 
   /** Per-task lazy reader of the dl sidecar: caches up to `cacheSegs`
@@ -315,22 +315,20 @@ object IndexBuilder {
     * so each term's walk revisits the partition's segments in order — a
     * small cache makes re-reads rare).
     */
-  final class DlSegReader(dir: String, docsPerSegment: Long,
-      cacheSegs: Int = 8) {
+  private final class DlSegReader(dir: String, docsPerSegment: Long,
+      conf: Configuration, cacheSegs: Int = 8) {
     private val cache = new java.util.LinkedHashMap[Long, Array[Int]](
       16, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[Long, Array[Int]]): Boolean =
         size() > cacheSegs
     }
-    @transient private lazy val fs =
-      new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        new org.apache.hadoop.conf.Configuration())
+    private lazy val fs = new Path(dir).getFileSystem(conf)
     def dl(docId: Long): Int = {
       val seg = docId / docsPerSegment
       var arr = cache.get(seg)
       if (arr == null) {
-        val p = new org.apache.hadoop.fs.Path(dir, s"seg-$seg.bin")
+        val p = new Path(dir, s"seg-$seg.bin")
         val len = fs.getFileStatus(p).getLen.toInt
         val bytes = new Array[Byte](len)
         val in = fs.open(p)
@@ -342,47 +340,6 @@ object IndexBuilder {
         cache.put(seg, arr)
       }
       arr((docId - seg * docsPerSegment).toInt)
-    }
-  }
-
-  /** Sidecar twin of [[encodeBlocksSlim]] for corpora past
-    * [[IndexConfig.dlBroadcastMaxDocs]]: dl comes from the committed
-    * per-segment sidecar read by the encoder's own partition — the slim
-    * exchange at any corpus size. Byte-identical blocks to the broadcast
-    * path (SlimExchangeSpec forces both).
-    */
-  def encodeBlocksSlimSidecar(
-      rows: org.apache.spark.sql.Dataset[(Long, Long, Array[Byte])],
-      sidecarDir: String, blockSize: Int, docsPerSegment: Long)
-      : org.apache.spark.sql.Dataset[PosPostingBlock] = {
-    import rows.sparkSession.implicits._
-    rows.mapPartitions { it =>
-      val reader = new DlSegReader(sidecarDir, docsPerSegment)
-      blockIterator(it.map { case (termId, docId, posv) =>
-        (termId, docId, BlockCodec.countVarints(posv), reader.dl(docId), posv)
-      }, blockSize, docsPerSegment)
-    }
-  }
-
-  /** Slim-exchange twin of [[encodeBlocks]]: rows carry only
-    * (termId, docId, packedPositions). tf is re-derived per row as the
-    * strip's varint count (one varint per position by construction —
-    * [[BlockCodec.packPositions]]) and dl comes from the broadcast
-    * [[DlTable]], so the repartition+sort that dominates build DRAM traffic
-    * moves two fewer 8-byte slots per (doc, term) row. Produces
-    * byte-identical blocks to [[encodeBlocks]] over the same input.
-    */
-  def encodeBlocksSlim(
-      rows: org.apache.spark.sql.Dataset[(Long, Long, Array[Byte])],
-      dlt: org.apache.spark.broadcast.Broadcast[DlTable],
-      blockSize: Int, docsPerSegment: Long)
-      : org.apache.spark.sql.Dataset[PosPostingBlock] = {
-    import rows.sparkSession.implicits._
-    rows.mapPartitions { it =>
-      val dl = dlt.value
-      blockIterator(it.map { case (termId, docId, posv) =>
-        (termId, docId, BlockCodec.countVarints(posv), dl(docId), posv)
-      }, blockSize, docsPerSegment)
     }
   }
 

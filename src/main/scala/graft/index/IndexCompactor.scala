@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Index maintenance: compaction of streaming-append debris.
@@ -40,16 +40,24 @@ final class IndexCompactor(spark: SparkSession, root: String,
     * for injecting exactly that interleaving.
     */
   def compactPostings(beforeCommit: () => Unit = () => ()): Long = {
-    import spark.implicits._
     // ONE snapshot capture drives both the rewritten-file set and the read:
     // resolving completedSteps twice would let an append commit in between,
     // decoding its postings into the rewrite while commitRewrite also keeps
     // its original files — duplicating that batch
     val snap = ice.completedSteps
-    val rewritten = snap("postings").files.map(_._1).toSet
-    val blocks = ice.readSteps(spark, snap, "postings")
-      .as[PosPostingBlock]
-    val rows = blocks.flatMap { b =>
+    val tag = reencode(ice.readSteps(spark, snap, "postings"))
+    beforeCommit()
+    commitRewrite("postings", tag, snap("postings").files.map(_._1).toSet,
+      Map("compacted" -> "true"))
+  }
+
+  /** Decode `blocks` to postings and re-encode them at full block size under
+    * the batch build's (termId, docId-segment) partitioning, into a fresh
+    * `postings/<tag>` directory; returns the tag.
+    */
+  private def reencode(blocks: DataFrame): String = {
+    import spark.implicits._
+    val rows = blocks.as[PosPostingBlock].flatMap { b =>
       val docs = BlockCodec.decodeDeltaLongs(b.docs, b.n)
       val tfs = BlockCodec.decodeInts(b.tfs, b.n)
       val dls = BlockCodec.decodeInts(b.dls, b.n)
@@ -61,45 +69,49 @@ final class IndexCompactor(spark: SparkSession, root: String,
         floor($"docId" / cfg.docsPerSegment))
       .sortWithinPartitions($"termId", $"docId")
       .as[(Long, Long, Int, Int, Array[Byte])]
-    val tag = s"compact-${java.util.UUID.randomUUID().toString.take(8)}"
+    val tag = newTag()
     IndexBuilder.encodeBlocks(sorted, cfg.blockSize, cfg.docsPerSegment)
       .toDF().write.parquet(s"${ice.tablePath("postings")}/$tag")
-    val newFiles = ice.parquetLineageIn("postings", tag)
-    beforeCommit()
-    commitRewrite(tag, rewritten, newFiles, "true")
+    tag
   }
 
-  /** Commit a rewrite optimistically. The make closure re-verifies against
-    * the CURRENT snapshot that every file this rewrite decoded is still
-    * listed: a concurrent compaction that already replaced any of them makes
-    * this rewrite a stale duplicate of the same postings — committing it
-    * would double that content (the loser would keep the winner's rewrite
-    * AND add its own copy). The stale loser aborts as a no-op: its output
-    * files are deleted and the current snapshot id is returned unchanged.
+  private def newTag(): String =
+    s"compact-${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** Commit the rewrite of `table` in `<table>/<tag>` optimistically. The
+    * make closure re-verifies against the CURRENT snapshot that every file
+    * this rewrite read is still listed: a concurrent compaction that already
+    * replaced any of them makes this rewrite a stale duplicate of the same
+    * content — committing it would double that content (the loser would
+    * keep the winner's rewrite AND add its own copy). The stale loser aborts
+    * as a no-op: its output files are deleted and the current snapshot id is
+    * returned unchanged. A dict commit carries the current `nextTermId`
+    * forward (a fold keeps every termId).
     */
-  private def commitRewrite(tag: String, rewritten: Set[String],
-      newFiles: Seq[(String, Long)], mode: String): Long =
+  private def commitRewrite(table: String, tag: String, rewritten: Set[String],
+      metrics: Map[String, String]): Long = {
+    val newFiles = ice.parquetLineageIn(table, tag)
     try ice.commitAtomically { cur =>
-      val curNames = cur("postings").files.map(_._1).toSet
+      val curNames = cur(table).files.map(_._1).toSet
       if (!rewritten.forall(curNames))
         throw IndexCompactor.StaleRewrite
-      val kept = cur("postings").files.filterNot { case (name, _) =>
+      val kept = cur(table).files.filterNot { case (name, _) =>
         rewritten(name)
       }
       val files = kept ++ newFiles
-      Seq(StepInfo("postings", ice.tablePath("postings"),
-        files.map(_._2).sum, files,
-        Map("version" -> tag, "compacted" -> mode,
-          "rewrittenFiles" -> rewritten.size.toString,
-          "keptFiles" -> kept.size.toString)))
+      val watermark = cur(table).metrics.get(IndexBuilder.NextTermId)
+        .map(IndexBuilder.NextTermId -> _)
+      Seq(StepInfo(table, ice.tablePath(table), files.map(_._2).sum, files,
+        Map("version" -> tag, "rewrittenFiles" -> rewritten.size.toString,
+          "keptFiles" -> kept.size.toString) ++ watermark ++ metrics))
     } catch {
       case IndexCompactor.StaleRewrite =>
-        val fs = new org.apache.hadoop.fs.Path(ice.tablePath("postings"))
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"${ice.tablePath("postings")}/$tag"), true)
+        val dir = new org.apache.hadoop.fs.Path(s"${ice.tablePath(table)}/$tag")
+        dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .delete(dir, true)
         ice.currentSnapshotId.get
     }
+  }
 
   /** Selective compaction — the shape that survives 100 TB: only files
     * dominated by SPLIT posting runs are rewritten (the Iceberg
@@ -140,25 +152,8 @@ final class IndexCompactor(spark: SparkSession, root: String,
     if (fragmented.isEmpty) return ice.currentSnapshotId.get
 
     val fragPaths = fragmented.toSeq.sorted.map(n => s"${ice.tablePath("postings")}/$n")
-    val rows = spark.read.parquet(fragPaths: _*).as[PosPostingBlock]
-      .flatMap { b =>
-        val docs = BlockCodec.decodeDeltaLongs(b.docs, b.n)
-        val tfs = BlockCodec.decodeInts(b.tfs, b.n)
-        val dls = BlockCodec.decodeInts(b.dls, b.n)
-        val strips = IndexCompactor.splitStrips(b.poss, tfs)
-        Iterator.tabulate(b.n)(i =>
-          (b.termId, docs(i), tfs(i), dls(i), strips(i)))
-      }.toDF("termId", "docId", "tf", "dl", "posv")
-    val sorted = rows
-      .repartition(cfg.partitions, $"termId",
-        floor($"docId" / cfg.docsPerSegment))
-      .sortWithinPartitions($"termId", $"docId")
-      .as[(Long, Long, Int, Int, Array[Byte])]
-    val tag = s"compact-${java.util.UUID.randomUUID().toString.take(8)}"
-    IndexBuilder.encodeBlocks(sorted, cfg.blockSize, cfg.docsPerSegment)
-      .toDF().write.parquet(s"${ice.tablePath("postings")}/$tag")
-    commitRewrite(tag, fragmented, ice.parquetLineageIn("postings", tag),
-      "selective")
+    val tag = reencode(spark.read.parquet(fragPaths: _*))
+    commitRewrite("postings", tag, fragmented, Map("compacted" -> "selective"))
   }
 
   /** Fold the dictionary's per-append delta files into one sorted base:
@@ -172,34 +167,16 @@ final class IndexCompactor(spark: SparkSession, root: String,
   def compactDictionary(): Long = {
     import spark.implicits._
     val snap = ice.completedSteps
-    val rewritten = snap("dict").files.map(_._1).toSet
     val folded = ice.readSteps(spark, snap, "dict")
       .groupBy($"termId", $"term")
       .agg(sum($"df").as("df"), sum($"cf").as("cf"))
       .repartitionByRange(cfg.partitions, $"term")
       .sortWithinPartitions($"term")
       .select($"termId", $"term", $"df", $"cf")
-    val tag = s"compact-${java.util.UUID.randomUUID().toString.take(8)}"
+    val tag = newTag()
     folded.write.parquet(s"${ice.tablePath("dict")}/$tag")
-    val newFiles = ice.parquetLineageIn("dict", tag)
-    try ice.commitAtomically { cur =>
-      val curNames = cur("dict").files.map(_._1).toSet
-      if (!rewritten.forall(curNames))
-        throw IndexCompactor.StaleRewrite
-      val kept = cur("dict").files.filterNot { case (n, _) => rewritten(n) }
-      val files = kept ++ newFiles
-      Seq(StepInfo("dict", ice.tablePath("dict"),
-        files.map(_._2).sum, files,
-        Map("version" -> tag, "compacted" -> "dict-fold",
-          "orderedBy" -> "term")))
-    } catch {
-      case IndexCompactor.StaleRewrite =>
-        val fs = new org.apache.hadoop.fs.Path(ice.tablePath("dict"))
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"${ice.tablePath("dict")}/$tag"), true)
-        ice.currentSnapshotId.get
-    }
+    commitRewrite("dict", tag, snap("dict").files.map(_._1).toSet,
+      Map("compacted" -> "dict-fold", "orderedBy" -> "term"))
   }
 
   /** Small-file compaction for a row table (corpus/docs/tfrows): rewrite the
@@ -209,28 +186,11 @@ final class IndexCompactor(spark: SparkSession, root: String,
     */
   def compactTable(name: String, numFiles: Int): Long = {
     val snap = ice.completedSteps // one capture: plan and read the same state
-    val rewritten = snap(name).files.map(_._1).toSet
-    val df = ice.readSteps(spark, snap, name).repartition(numFiles)
-    val tag = s"compact-${java.util.UUID.randomUUID().toString.take(8)}"
-    df.write.parquet(s"${ice.tablePath(name)}/$tag")
-    val newFiles = ice.parquetLineageIn(name, tag)
-    try ice.commitAtomically { cur =>
-      val curNames = cur(name).files.map(_._1).toSet
-      if (!rewritten.forall(curNames))
-        throw IndexCompactor.StaleRewrite // same loser-aborts rule as postings
-      val kept = cur(name).files.filterNot { case (n, _) => rewritten(n) }
-      val files = kept ++ newFiles
-      Seq(StepInfo(name, ice.tablePath(name),
-        files.map(_._2).sum, files,
-        Map("version" -> tag, "compacted" -> "true")))
-    } catch {
-      case IndexCompactor.StaleRewrite =>
-        val fs = new org.apache.hadoop.fs.Path(ice.tablePath(name))
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"${ice.tablePath(name)}/$tag"), true)
-        ice.currentSnapshotId.get
-    }
+    val tag = newTag()
+    ice.readSteps(spark, snap, name).repartition(numFiles)
+      .write.parquet(s"${ice.tablePath(name)}/$tag")
+    commitRewrite(name, tag, snap(name).files.map(_._1).toSet,
+      Map("compacted" -> "true"))
   }
 }
 

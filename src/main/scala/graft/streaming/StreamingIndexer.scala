@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.corpus.Page
-import graft.index.{IceTable, IndexBuilder, IndexConfig, PostingBlock, Ranker, StepInfo}
-import graft.krep.{functions => K}
+import graft.index.{IceTable, IndexConfig, PosPostingBlock, Ranker, StepInfo}
+import graft.index.IndexBuilder._
 
 /** Incremental index maintenance (SURVEY.md §2.8): new pages append new
   * posting blocks; nothing already written is rewritten except the small
@@ -54,32 +54,25 @@ final class StreamingIndexer(spark: SparkSession, root: String,
   }
 
   private def bootstrapEmpty(): Unit = {
-    import org.apache.spark.sql.SaveMode
-    def write(df: org.apache.spark.sql.DataFrame, table: String): Unit =
+    def write(df: DataFrame, table: String): Unit =
       df.write.mode(SaveMode.Overwrite).parquet(ice.tablePath(table))
-    val corpus = spark.emptyDataset[Page]
-      .select(lit(0L).as("docId"), $"url",
-        K.krep_token_count($"text").as("dl"), $"text")
+    val corpus = corpusRows(spark.emptyDataset[Page]
+      .select(lit(0L).as("docId"), $"url", $"text"))
     write(corpus, "corpus")
-    val docs = corpus.select($"docId", $"url", $"dl")
+    val docs = docRows(corpus)
     write(docs, "docs")
-    write(docs.agg(count("*").as("n"),
-      coalesce(avg("dl"), lit(0.0)).as("avgdl")), "stats")
-    val tfrows = corpus
-      .select($"docId", $"dl",
-        explode(K.krep_term_positions_packed($"text")).as("t"))
-      .select($"docId", $"t.term".as("term"),
-        $"t.tf".as("tf"), $"dl", $"t.posv".as("posv"))
+    write(statsRow(docs), "stats")
+    val tfrows = tfRows(corpus)
     write(tfrows, "tfrows")
-    write(tfrows.groupBy($"term")
-      .agg(count("*").as("df"), sum($"tf").as("cf"))
+    write(termCounts(tfrows)
       .select(lit(0L).as("termId"), $"term", $"df", $"cf"), "dict")
-    write(spark.emptyDataset[graft.index.PosPostingBlock].toDF(), "postings")
+    write(spark.emptyDataset[PosPostingBlock].toDF(), "postings")
     ice.commitSteps(Seq("corpus", "docs", "stats", "tfrows", "dict",
       "postings").map { n =>
       val lineage = ice.parquetLineage(n)
-      graft.index.StepInfo(n, ice.tablePath(n), lineage.map(_._2).sum,
-        lineage, Map("bootstrap" -> "empty"))
+      val watermark = if (n == "dict") Map(NextTermId -> "0") else Map.empty
+      StepInfo(n, ice.tablePath(n), lineage.map(_._2).sum,
+        lineage, Map("bootstrap" -> "empty") ++ watermark)
     })
   }
 
@@ -103,7 +96,8 @@ final class StreamingIndexer(spark: SparkSession, root: String,
     ensureInitialized()
     val steps = ice.completedSteps
     val baseN = steps("docs").rowCount
-    val maxTermId = steps("dict").rowCount // termIds are 0-based dense
+    val nextTermId = steps("dict").metrics.get(NextTermId).map(_.toLong)
+      .getOrElse(maxTermIdPlusOne(ice.readTable(spark, "dict")))
     val tag = s"b${ice.currentSnapshotId.getOrElse(0L)}-" +
       java.util.UUID.randomUUID().toString.take(8)
     def crash(point: String): Unit =
@@ -121,31 +115,27 @@ final class StreamingIndexer(spark: SparkSession, root: String,
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (fresh.isEmpty) return
-      appendFresh(fresh, baseN, maxTermId, tag, crash)
+      appendFresh(fresh, baseN, nextTermId, tag, crash)
     } finally fresh.unpersist(false)
   }
 
-  private def appendFresh(fresh: org.apache.spark.sql.DataFrame, baseN: Long,
-      maxTermId: Long, tag: String, crash: String => Unit): Unit = {
+  /** Index written before the watermark metric: max termId + 1. */
+  private def maxTermIdPlusOne(dict: DataFrame): Long =
+    dict.agg(coalesce(max($"termId") + 1, lit(0L))).head().getLong(0)
+
+  private def appendFresh(fresh: DataFrame, baseN: Long, nextTermId: Long,
+      tag: String, crash: String => Unit): Unit = {
     // new docIds continue the dense sequence: baseN + rank(url within batch)
     val ranked = Ranker.denseIdsByKey(fresh, "url", "batchRank", cfg.partitions)
       .withColumn("docId", $"batchRank" + lit(baseN)).drop("batchRank")
 
     def deltaDir(table: String): String = s"${ice.tablePath(table)}/$tag"
 
-    val corpusDelta = ranked.select($"docId", $"url",
-      K.krep_token_count($"text").as("dl"), $"text")
-    corpusDelta.write.parquet(deltaDir("corpus"))
+    corpusRows(ranked).write.parquet(deltaDir("corpus"))
     // read the delta back once: corpus/docs/tfrows/postings all derive from it
     val corpusDeltaC = spark.read.parquet(deltaDir("corpus"))
-    corpusDeltaC.select($"docId", $"url", $"dl").write.parquet(deltaDir("docs"))
-
-    val tfDelta = corpusDeltaC
-      .select($"docId", $"dl",
-        explode(K.krep_term_positions_packed($"text")).as("t"))
-      .select($"docId", $"t.term".as("term"),
-        $"t.tf".as("tf"), $"dl", $"t.posv".as("posv"))
-    tfDelta.write.parquet(deltaDir("tfrows"))
+    docRows(corpusDeltaC).write.parquet(deltaDir("docs"))
+    tfRows(corpusDeltaC).write.parquet(deltaDir("tfrows"))
     val tfDeltaC = spark.read.parquet(deltaDir("tfrows"))
 
     crash("dict")
@@ -154,72 +144,39 @@ final class StreamingIndexer(spark: SparkSession, root: String,
     // this batch's PARTIAL counts, resolved by summation at read time
     // (IndexDict.merge* / the aggregated scan paths). Known terms reuse
     // their committed termId via a join against the DISTINCT committed
-    // (termId, term) pairs; brand-new terms extend the id watermark. An
-    // append therefore writes O(batch vocabulary) dict bytes, not O(dict) —
-    // the round-5 per-batch full-dict rewrite is gone. termIds may grow
-    // with gaps (the watermark is the committed row count, an upper bound);
-    // ids stay unique, which is all any reader assumes.
+    // (termId, term) pairs; brand-new terms take ids from the committed
+    // `nextTermId` watermark up. An append therefore writes O(batch
+    // vocabulary) dict bytes, not O(dict).
     val oldTerms = ice.readTable(spark, "dict")
       .select($"termId", $"term").distinct()
-    val deltaAgg = tfDeltaC.groupBy($"term")
-      .agg(count(lit(1)).as("ddf"), sum($"tf").as("dcf"))
     // persisted: the known/new split references the join twice and the
     // new-term ranker's range partitioner samples it a third time
-    val withIds = deltaAgg.join(oldTerms, Seq("term"), "left_outer")
+    val withIds = termCounts(tfDeltaC).join(oldTerms, Seq("term"), "left_outer")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val known = withIds.filter($"termId".isNotNull)
-        .select($"termId", $"term", $"ddf".as("df"), $"dcf".as("cf"))
+        .select($"termId", $"term", $"df", $"cf")
       val newTerms = Ranker.denseIdsByKey(
-        withIds.filter($"termId".isNull).select($"term", $"ddf", $"dcf"),
+        withIds.filter($"termId".isNull).select($"term", $"df", $"cf"),
         "term", "newRank", cfg.partitions)
-        .select(($"newRank" + lit(maxTermId)).as("termId"), $"term",
-          $"ddf".as("df"), $"dcf".as("cf"))
+        .select(($"newRank" + lit(nextTermId)).as("termId"), $"term",
+          $"df", $"cf")
       known.unionByName(newTerms).write.parquet(deltaDir("dict"))
     } finally withIds.unpersist(false)
+    val dictDelta = spark.read.parquet(deltaDir("dict"))
+    val nextTermIdAfter = math.max(nextTermId, maxTermIdPlusOne(dictDelta))
 
-    // postings delta: same exchange discipline as the batch build. The dict
-    // join reads the batch's own DELTA dictionary (exactly this batch's
-    // vocabulary, termIds included) and is GATED on its row count (read
-    // from the parquet footers just written — zero extra jobs) exactly like
-    // IndexBuilder's dictBroadcastThreshold: a vocabulary-heavy batch is
-    // never broadcast. And the exchange is the SLIM one whenever the BATCH
-    // fits the dl table (batch docIds are dense from baseN, so
-    // DlTable(baseN, dls) is one Int per batch doc): tf re-derives from the
-    // posv varint count, dl from the broadcast table — two fewer slots per
-    // (doc, term) row through the append's widest shuffle, byte-identical
-    // blocks (SlimExchangeSpec pins the streaming path too).
-    val deltaDictRows = ice.parquetLineageIn("dict", tag).map(_._2).sum
-    val dictDf = spark.read.parquet(deltaDir("dict")).select($"termId", $"term")
-    val dictJ =
-      if (deltaDictRows <= cfg.dictBroadcastThreshold) broadcast(dictDf)
-      else dictDf
-    val batchDocs = ice.parquetLineageIn("docs", tag).map(_._2).sum
-    val blocks = if (batchDocs <= cfg.dlBroadcastMaxDocs) {
-      val dlArr = new Array[Int](batchDocs.toInt)
-      corpusDeltaC.select($"docId", $"dl".cast("int")).as[(Long, Int)]
-        .collect().foreach { case (d, l) => dlArr((d - baseN).toInt) = l }
-      val dlt = spark.sparkContext.broadcast(IndexBuilder.DlTable(baseN, dlArr))
-      val rows = tfDeltaC.join(dictJ, "term")
-        .select($"termId", $"docId", $"posv")
-        .as[(Long, Long, Array[Byte])]
-        .repartition(cfg.partitions, $"termId", floor($"docId" / cfg.docsPerSegment))
-        .sortWithinPartitions($"termId", $"docId")
-      IndexBuilder.encodeBlocksSlim(rows, dlt, cfg.blockSize, cfg.docsPerSegment)
-    } else {
-      val rows = tfDeltaC.join(dictJ, "term")
-        .select($"termId", $"docId", $"tf".cast("int"), $"dl".cast("int"), $"posv")
-        .as[(Long, Long, Int, Int, Array[Byte])]
-        .repartition(cfg.partitions, $"termId", floor($"docId" / cfg.docsPerSegment))
-        .sortWithinPartitions($"termId", $"docId")
-      IndexBuilder.encodeBlocks(rows, cfg.blockSize, cfg.docsPerSegment)
-    }
-    blocks.toDF().write.parquet(deltaDir("postings"))
+    // postings delta: the batch build's write path over the batch's own
+    // DELTA dictionary (exactly this batch's vocabulary, termIds included),
+    // its broadcast gated on the delta's row count read from the parquet
+    // footers just written — a vocabulary-heavy batch is never broadcast
+    writePostings(tfDeltaC, dictDelta.select($"termId", $"term"),
+      ice.parquetLineageIn("dict", tag).map(_._2).sum, corpusDeltaC,
+      deltaDir("postings"), ice.scratchPath(s"dl-$tag"), cfg)
 
     // stats: committed docs ∪ this delta — a new version directory
-    ice.readTable(spark, "docs").select($"dl")
-      .unionByName(corpusDeltaC.select($"dl"))
-      .agg(count(lit(1)).as("n"), coalesce(avg($"dl"), lit(0.0)).as("avgdl"))
+    statsRow(ice.readTable(spark, "docs").select($"dl")
+      .unionByName(corpusDeltaC.select($"dl")))
       .write.parquet(deltaDir("stats"))
 
     crash("commit")
@@ -233,10 +190,11 @@ final class StreamingIndexer(spark: SparkSession, root: String,
     // themselves serialize (synchronized + docId/dict assignment).
     def lineage(t: String) = ice.parquetLineageIn(t, tag)
     ice.commitAtomically { cur =>
-      def appended(t: String): StepInfo = {
+      def appended(t: String, metrics: Map[String, String] = Map.empty)
+          : StepInfo = {
         val files = cur(t).files ++ lineage(t)
         StepInfo(t, ice.tablePath(t), files.map(_._2).sum, files,
-          Map("appended" -> "true"))
+          Map("appended" -> "true") ++ metrics)
       }
       def versioned(t: String): StepInfo = {
         val files = lineage(t)
@@ -244,7 +202,8 @@ final class StreamingIndexer(spark: SparkSession, root: String,
           Map("version" -> tag))
       }
       Seq(appended("corpus"), appended("docs"), appended("tfrows"),
-        appended("dict"), appended("postings"), versioned("stats"))
+        appended("dict", Map(NextTermId -> nextTermIdAfter.toString)),
+        appended("postings"), versioned("stats"))
     }
   }
 

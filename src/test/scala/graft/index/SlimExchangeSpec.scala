@@ -2,88 +2,94 @@ package graft.index
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.corpus.SynthWebText
 
-/** The slim postings exchange (tf re-derived from the posv strip's varint
-  * count, dl from a broadcast dense-docId table) must be a pure physical
-  * optimization: byte-identical posting blocks to the dl-carrying exchange
-  * over the same corpus. The `dlBroadcastMaxDocs` gate forces each path.
+/** The postings write path (slim (termId, docId, posv) exchange, tf
+  * re-derived from the posv strip's varint count, dl from the per-segment
+  * sidecar) must be a pure physical optimization: byte-identical blocks to
+  * the compaction encoder [[IndexBuilder.encodeBlocks]] fed dl-carrying rows
+  * assembled here from the committed tfrows ⋈ dict ⋈ docs.
   */
 class SlimExchangeSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
+  private val cfg = IndexConfig(blockSize = 64, docsPerSegment = 512,
+    partitions = 4)
 
-  private def blockSig(root: String): Set[String] = {
+  private def blockSig(blocks: DataFrame): Set[String] = {
     import spark.implicits._
-    spark.read.parquet(s"$root/data/postings")
-      .select(concat_ws("|", $"termId", $"segId", $"firstDoc", $"lastDoc",
-        $"n", $"maxTf", $"minDl", hex(hash($"docs")), hex(hash($"tfs")),
-        hex(hash($"dls")), hex(hash($"poss"))))
+    blocks.select(concat_ws("|", $"termId", $"segId", $"firstDoc", $"lastDoc",
+        $"n", $"maxTf", $"minDl", sha2($"docs", 256), sha2($"tfs", 256),
+        sha2($"dls", 256), sha2($"poss", 256)))
       .as[String].collect().toSet
   }
 
-  test("slim exchange encodes byte-identical blocks via broadcast AND sidecar dl") {
-    val nDocs = 3000L
-    val pages = SynthWebText.pages(spark, nDocs, numPartitions = 4)
+  private def committedSig(root: String): Set[String] =
+    blockSig(new IceTable(root, spark.sparkContext.hadoopConfiguration)
+      .readTable(spark, "postings"))
 
-    val slimRoot = Files.createTempDirectory("graft-slim-").toString
-    new IndexBuilder(spark, slimRoot, IndexConfig(blockSize = 64,
-      docsPerSegment = 512, partitions = 8)).build(pages)
-
-    // gate closed → the past-the-gate path: dl from the per-segment
-    // doc-values sidecar instead of the broadcast table (VERDICT r5 #5 —
-    // the slim exchange at any corpus size)
-    val wideRoot = Files.createTempDirectory("graft-wide-").toString
-    val sidecarRan = new IndexBuilder(spark, wideRoot, IndexConfig(blockSize = 64,
-      docsPerSegment = 512, partitions = 8,
-      dlBroadcastMaxDocs = 0L)).build(pages)
-    assert(sidecarRan.contains("dlseg"),
-      "past the gate the build must commit the dl sidecar step")
-
-    val slim = blockSig(slimRoot)
-    val wide = blockSig(wideRoot)
-    assert(slim == wide,
-      s"block sets differ: slim-only=${(slim diff wide).take(3)} " +
-        s"wide-only=${(wide diff slim).take(3)}")
-    assert(slim.nonEmpty)
+  /** Reference blocks of an index: one [[IndexBuilder.encodeBlocks]] pass
+    * per docId range `[lo, hi)` (a batch build is one range; each append
+    * encodes only its own batch).
+    */
+  private def referenceSig(root: String, ranges: Seq[(Long, Long)]): Set[String] = {
+    import spark.implicits._
+    val ice = new IceTable(root, spark.sparkContext.hadoopConfiguration)
+    val dict = ice.readTable(spark, "dict").select($"termId", $"term").distinct()
+    val rows = ice.readTable(spark, "tfrows").join(dict, "term")
+      .join(ice.readTable(spark, "docs").select($"docId", $"dl"), "docId")
+      .select($"termId", $"docId", $"tf".cast("int"), $"dl".cast("int"), $"posv")
+    ranges.map { case (lo, hi) =>
+      val sorted = rows.filter($"docId" >= lo && $"docId" < hi)
+        .as[(Long, Long, Int, Int, Array[Byte])]
+        .repartition(cfg.partitions, $"termId",
+          floor($"docId" / cfg.docsPerSegment))
+        .sortWithinPartitions($"termId", $"docId")
+      blockSig(IndexBuilder.encodeBlocks(sorted, cfg.blockSize,
+        cfg.docsPerSegment).toDF())
+    }.reduce(_ ++ _)
   }
 
-  test("streaming appender: slim+broadcast path == forced plain-join fat path, byte-identical") {
+  private def assertSame(got: Set[String], want: Set[String]): Unit = {
+    assert(want.nonEmpty)
+    assert(got == want,
+      s"block sets differ: written-only=${(got diff want).take(3)} " +
+        s"reference-only=${(want diff got).take(3)}")
+  }
+
+  test("build blocks == encodeBlocks reference, byte-identical") {
+    val nDocs = 3000L
+    val root = Files.createTempDirectory("graft-slim-").toString
+    new IndexBuilder(spark, root, cfg)
+      .build(SynthWebText.pages(spark, nDocs, numPartitions = 4))
+    assertSame(committedSig(root), referenceSig(root, Seq((0L, nDocs))))
+  }
+
+  test("append blocks == encodeBlocks reference, mid-segment start") {
     import spark.implicits._
-    val nDocs = 1200L
     def batch(lo: Long, hi: Long) =
       spark.range(lo, hi, 1, 2).map(i => SynthWebText.page(i))
-    val cfgBase = IndexConfig(blockSize = 64, docsPerSegment = 512,
-      partitions = 4)
+    // the second batch's docIds 700..1299 start inside segment 1 (512..1023)
+    // and cross into segment 2; a plain shuffle dict join (threshold 0)
+    // covers the non-broadcast side of the join gate
+    val root = Files.createTempDirectory("graft-stream-slim-").toString
+    val idx = new graft.streaming.StreamingIndexer(spark, root,
+      cfg.copy(dictBroadcastThreshold = 0L))
+    idx.appendBatch(batch(0L, 700L))
+    idx.appendBatch(batch(700L, 1300L))
+    assertSame(committedSig(root),
+      referenceSig(root, Seq((0L, 700L), (700L, 1300L))))
 
-    // default gates: merged dict below threshold → broadcast join; batch
-    // below dlBroadcastMaxDocs → slim exchange
-    val slimRoot = Files.createTempDirectory("graft-stream-slim-").toString
-    val slimIdx = new graft.streaming.StreamingIndexer(spark, slimRoot, cfgBase)
-    slimIdx.appendBatch(batch(0L, nDocs / 2))
-    slimIdx.appendBatch(batch(nDocs / 2, nDocs))
-
-    // gates closed (threshold 0): plain shuffle dict join + fat dl-carrying
-    // exchange — the 10^8-dict appender's path, forced on a small fixture
-    val fatRoot = Files.createTempDirectory("graft-stream-fat-").toString
-    val fatIdx = new graft.streaming.StreamingIndexer(spark, fatRoot,
-      cfgBase.copy(dictBroadcastThreshold = 0L, dlBroadcastMaxDocs = 0L))
-    fatIdx.appendBatch(batch(0L, nDocs / 2))
-    fatIdx.appendBatch(batch(nDocs / 2, nDocs))
-
-    // same batch splits → same docId assignment → block-level comparison
-    assert(blockSig(slimRoot) == blockSig(fatRoot),
-      "streaming slim and fat appends must encode byte-identical blocks")
-
-    // streaming == batch stays intact on BOTH paths (url-keyed: batch and
-    // incremental builds assign different docIds to the same documents)
+    // streaming == batch (url-keyed: batch and incremental builds assign
+    // different docIds to the same documents)
     val batchRoot = Files.createTempDirectory("graft-stream-batch-").toString
-    new IndexBuilder(spark, batchRoot, cfgBase)
-      .build(SynthWebText.pages(spark, nDocs, numPartitions = 4))
+    new IndexBuilder(spark, batchRoot, cfg)
+      .build(SynthWebText.pages(spark, 1300L, numPartitions = 4))
     val q = Seq(0, 3, 7).map(SynthWebText.term).mkString(" ")
     def byUrl(root: String): Seq[(Double, String)] =
       new graft.query.QueryEngine(spark, root)
@@ -92,8 +98,7 @@ class SlimExchangeSpec extends AnyFunSuite {
         .sortBy { case (s, u) => (-s, u) }.toSeq
     val want = byUrl(batchRoot)
     assert(want.nonEmpty)
-    assert(byUrl(slimRoot) == want)
-    assert(byUrl(fatRoot) == want)
+    assert(byUrl(root) == want)
   }
 
   test("countVarints recovers tf from every packed strip shape") {

@@ -227,4 +227,31 @@ class StreamingIndexerSpec extends AnyFunSuite {
     val hits = new QueryEngine(spark, root).search(SynthWebText.Markers(0), 10)
     assert(hits.nonEmpty, "streamed index should answer the marker query")
   }
+
+  test("termId <-> term stays a bijection across appends and a dict fold") {
+    import spark.implicits._
+    def words(prefix: String, n: Int) = (0 until n).map(i => s"$prefix${('a' + i).toChar}")
+    def pages(name: String, terms: Seq[String]) = Seq(graft.corpus.Page(
+      s"https://p0.example/$name", new java.sql.Timestamp(0L),
+      Array.emptyByteArray, terms.mkString(" "), "en")).toDS()
+    val base = words("aaaa", 10)
+    val root = Files.createTempDirectory("graft-termids-").toString
+    new IndexBuilder(spark, root, cfg).build(pages("base", base))
+    val indexer = new StreamingIndexer(spark, root, cfg)
+    // each delta repeats 5 known terms, so the dict row count outruns the
+    // distinct term count until the fold shrinks it back
+    indexer.appendBatch(pages("b1", base.take(5) ++ words("bbbb", 5)))
+    indexer.appendBatch(pages("b2", base.take(5) ++ words("cccc", 5)))
+    new graft.index.IndexCompactor(spark, root, cfg).compactDictionary()
+    indexer.appendBatch(pages("b3", words("dddd", 6)))
+
+    val pairs = indexer.ice.readTable(spark, "dict")
+      .select($"termId", $"term").distinct().as[(Long, String)].collect()
+    val byId = pairs.groupBy(_._1).filter(_._2.length > 1)
+    assert(byId.isEmpty, s"termIds shared by several terms: ${byId.values.map(_.toSeq)}")
+    assert(pairs.map(_._2).distinct.length == pairs.length, "a term has several ids")
+    assert(pairs.length == 26)
+    assert(indexer.ice.completedSteps("dict").metrics("nextTermId").toLong ==
+      pairs.map(_._1).max + 1)
+  }
 }
