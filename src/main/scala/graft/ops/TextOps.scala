@@ -74,34 +74,11 @@ object TextOps {
     when(union > 0L, inter * 10000L / union).otherwise(lit(0L)).cast("long")
   }
 
-  /** MinHash signature (k hashes) over n-gram shingles: one xxhash64 per
-    * shingle, then k cheap universal-hash mixes — O(k·|shingles|) arithmetic,
-    * one pass, no shuffle.
-    */
-  /** Hash each shingle once. Materialize this as its own column before
-    * calling [[minhashFromHashes]]: higher-order lambdas get no common-
-    * subexpression elimination, so feeding an expression (rather than a
-    * bound column) recomputes the whole shingle pipeline k times per row.
-    */
-  def shingleHashes(text: Column, shingleN: Int = 3): Column =
-    transform(shingles(text, shingleN), s => xxhash64(s))
-
-  /** MinHash signature from pre-hashed shingles: the i-th hash family
-    * member is xxhash64 re-seeded by i (no wrapping multiply — ANSI mode
-    * rejects overflow).
-    */
-  def minhashFromHashes(hs: Column, k: Int = 32): Column =
-    transform(sequence(lit(0), lit(k - 1)), i =>
-      aggregate(hs, lit(Long.MaxValue), (m, h) => least(m, xxhash64(h, i))))
-
-  def minhashSignature(text: Column, k: Int = 32, shingleN: Int = 3): Column =
-    minhashFromHashes(shingleHashes(text, shingleN), k)
-
   /** SimHash64 over term frequencies: bit j set iff Σ tf·(±1 from hash bit j)
     * is positive.
     */
   /** (termHash, tf) pairs — materialize as a column before
-    * [[simhash64FromHashedTf]] (see [[shingleHashes]] for why).
+    * [[simhash64FromHashedTf]] (see [[shingleHashesPoly]] for why).
     */
   def hashedTermFreqs(text: Column): Column =
     transform(K.krep_term_freqs(text), e =>
@@ -124,11 +101,10 @@ object TextOps {
     simhash64FromHashedTf(hashedTermFreqs(text))
 
   // --- cross-engine-exact variants (PolyHash mod 2^31-1) ---------------------
-  // Same MinHash/SimHash semantics, but every intermediate value is exact
-  // integer arithmetic reproducible in ANSI SQL — so the DuckDB oracle can
-  // verify full values, not just row counts. The xxhash64 variants above stay
-  // the production default (wider hash); these are the differential-testable
-  // twins.
+  // MinHash and SimHash whose every intermediate value is exact integer
+  // arithmetic reproducible in ANSI SQL — so the DuckDB oracle can verify
+  // full values, not just row counts. The xxhash64 SimHash above is the
+  // wider-hash library variant.
 
   val HashP = 2147483647L // 2^31 - 1
 
@@ -139,8 +115,11 @@ object TextOps {
     (a, b)
   }
 
-  /** One PolyHash per shingle (materialize before the k min-scans — see
-    * [[shingleHashes]] for the CollapseProject recompute trap).
+  /** One PolyHash per shingle. Materialize this as its own column before
+    * the k min-scans of [[minhashPolyFromHashes]]: higher-order lambdas get
+    * no common-subexpression elimination, so feeding an expression (rather
+    * than a bound column) recomputes the whole shingle pipeline k times per
+    * row.
     */
   def shingleHashesPoly(text: Column, shingleN: Int = 3): Column =
     transform(shingles(text, shingleN), s => kernels.poly_hash(s))

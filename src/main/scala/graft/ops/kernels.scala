@@ -361,7 +361,10 @@ object MinHasher {
   }
 }
 
-/** text → k-slot PolyHash MinHash signature (codegen'd; see [[MinHasher]]). */
+/** text → k-slot PolyHash MinHash signature (codegen'd; see [[MinHasher]]).
+  * Null-intolerant: NULL text gives a NULL signature, not the all-P one of
+  * an empty shingle set.
+  */
 case class MinHashShingleSig(child: Expression, shingleN: Int, k: Int)
     extends UnaryExpression {
   override def nullIntolerant: Boolean = true
@@ -396,7 +399,8 @@ case class BandHashesPoly(child: Expression, bands: Int, rows: Int)
 /** text → n-gram shingle strings (codegen'd twin of
   * `transform(sequence(…), i => concat_ws(" ", tok_i, …))`): identical
   * values — each shingle is the space-joined folded tokens — built in one
-  * pass over the token byte slices.
+  * pass over the token byte slices. Null-intolerant: NULL text gives NULL,
+  * not an empty array.
   */
 case class ShingleStrings(child: Expression, shingleN: Int)
     extends UnaryExpression {
@@ -444,7 +448,8 @@ object ShingleStrings {
   * `hashedTermFreqsPoly → 31 × aggregate(vote)`): per distinct term, tf
   * ±1-votes on each hash bit; bit j set iff the vote is positive; bits
   * assembled MSB-first — identical values (long adds are exact and
-  * commutative over the per-term votes).
+  * commutative over the per-term votes). Null-intolerant: NULL text gives
+  * NULL, not 0.
   */
 case class Simhash31(child: Expression) extends UnaryExpression {
   override def nullIntolerant: Boolean = true

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.index.{BlockDocIds, IceTable, StepInfo}
-import graft.krep.{AsciiFold, KrepContains, KrepParams}
+import graft.krep.{AsciiFold, KrepContains}
 
 /** Evaluation-transparent marker around a filter conjunct the rewrite has
   * already served: same value, same nullability, same codegen as its child.
@@ -68,39 +68,34 @@ case class IndexServed(child: Expression)
   * and the folded token — a dict term of the doc — contains the folded
   * pattern. Holds for case-sensitive, case-insensitive and whole-word
   * matching (the recheck restores the exact semantics); multi-pattern OR
-  * qualifies when every pattern does (candidates = union via the same
-  * multi-pattern dict scan). Regex, patterns with non-word bytes (spanning
+  * qualifies when every pattern does (candidates = union over the
+  * patterns' dict matches). Regex, patterns with non-word bytes (spanning
   * token boundaries), and explicit `algo` kernel overrides stand down — the
   * `--algo` contract is that the forced kernel executes
   * ([[graft.krep.SimplifyKrepContains]] precedent, krep.c:1786-1795) — and
-  * so do UNSELECTIVE patterns (substring of a hot dict term collected at
+  * so do UNSELECTIVE patterns (substring of a hot dict term taken at
   * [[register]] time), for which the scan filter is the cheaper access path.
   *
-  * Scale shape: the dict scan is one columnar pass over terms (the relation
-  * that is ~5 orders smaller than the corpus); postings prune to matching
-  * termIds via the broadcastable dict side; the semi join's build side is
-  * distinct docIds, sized by the pattern's true selectivity, and AQE picks
-  * broadcast-semi vs shuffle at runtime. A selective pattern skips the
-  * per-row pattern work for every non-candidate doc; an unselective one is
-  * caught by the hot-term gate at plan time and keeps the plain scan filter
-  * (see [[register]]).
+  * Scale shape: the matching termIds come from the snapshot's [[TermDict]]
+  * (driver CPU, or one columnar pass over the dict — the relation ~5 orders
+  * smaller than the corpus — when the dict is too big to hold); postings
+  * prune to those termIds; the semi join's build side is distinct docIds,
+  * sized by the pattern's true selectivity, and AQE picks broadcast-semi vs
+  * shuffle at runtime. A selective pattern skips the per-row pattern work
+  * for every non-candidate doc; an unselective one is caught by the
+  * hot-term gate at plan time and keeps the plain scan filter (see
+  * [[register]]).
   */
 object IndexFilterRewrite {
 
-  private final case class Entry(root: String,
+  private final case class Entry(ice: IceTable,
       snapshot: scala.collection.Map[String, StepInfo],
       corpusFiles: Set[String],
-      docCount: Long,
       hotTerms: Array[String],
-      // full (term, termId) dict when small enough to pin at register time
-      // (the serving-tier discipline QueryEngine.dictCacheThreshold applies
-      // to queries): candidate termIds then resolve at PLAN time on the
-      // driver — no dict-scan job, no dict join in the candidate plan
-      dictTerms: Array[String],
-      dictTermIds: Array[Long],
-      // the gate parameters this entry was built with — a re-register with
-      // different knobs must rebuild, not silently keep the old gates
-      params: (Double, Int, Long))
+      dict: TermDict,
+      // the gate this entry was built with — a re-register with a different
+      // gate must rebuild, not silently keep the old one
+      maxCandidateFrac: Double)
 
   /** Registered corpora, keyed by index root. */
   private val entries = new ConcurrentHashMap[String, Entry]
@@ -109,6 +104,13 @@ object IndexFilterRewrite {
     * engine-pinning discipline) and install the rule on the session. Filters
     * over that snapshot's corpus files are rewritten from then on.
     *
+    * Cost floor (`minCorpusDocs`): below this corpus size the rewrite stands
+    * down entirely — the semi-join machinery (dict resolution, candidate
+    * explode + distinct, the join itself) costs more than the codegen'd scan
+    * filter it would replace when the whole corpus scans in milliseconds.
+    * `minCorpusDocs = 0` disables it (tests and plan-assert rows that must
+    * observe the firing register with 0).
+    *
     * Selectivity gate (`maxCandidateFrac`): the rewrite is an access-path
     * CHOICE, and for an unselective pattern it is the wrong one — when the
     * candidate docId set approaches the corpus, the semi join's build side
@@ -116,80 +118,37 @@ object IndexFilterRewrite {
     * full corpus to prune almost nothing, strictly worse at 10^12 docs than
     * the codegen'd scan filter it replaced. Since candidates = postings of
     * every dict term CONTAINING the pattern, any single hot term already
-    * lower-bounds the candidate count; registration therefore collects the
-    * terms with df > maxCandidateFrac·N (one columnar scan of the dict — the
-    * relation ~5 orders smaller than the corpus — at register time, never at
-    * plan time) and the rule stands down when a pattern is a substring of
-    * any of them. Driver footprint is bounded by `hotTermCap`; with the
-    * default frac, Σdf ≤ N·avgDistinctTerms caps the number of qualifying
-    * terms at ~8·avgDistinctTerms, far under the cap. The gate is a cost
-    * heuristic, not a soundness condition — both plans return identical
-    * rows — so `maxCandidateFrac = 1.0` disables it (no dict scan).
-    */
-  /** Cost floor (`minCorpusDocs`): below this corpus size the rewrite stands
-    * down entirely — the semi-join machinery (dict resolution, candidate
-    * explode + distinct, the join itself) costs more than the codegen'd scan
-    * filter it would replace when the whole corpus scans in milliseconds.
-    * Like the hot-term gate it is a cost heuristic, never a soundness
-    * condition; `minCorpusDocs = 0` disables it (tests and plan-assert rows
-    * that must observe the firing register with 0).
+    * lower-bounds the candidate count; registration therefore takes the
+    * terms with df > maxCandidateFrac·N from the snapshot's [[TermDict]]
+    * (at register time, never at plan time) and the rule stands down when a
+    * pattern is a substring of any of them. At most
+    * [[TermDict.HotTermCap]] hot terms are kept; with the default frac,
+    * Σdf ≤ N·avgDistinctTerms caps the number of qualifying terms at
+    * ~8·avgDistinctTerms, far under the cap. Both gates are cost
+    * heuristics, not soundness conditions — both plans return identical
+    * rows — and `maxCandidateFrac = 1.0` disables the selectivity gate.
     */
   def register(spark: SparkSession, root: String,
-      maxCandidateFrac: Double = 0.125, hotTermCap: Int = 4096,
-      minCorpusDocs: Long = 100000L,
-      dictCacheMax: Long = 500000L): Unit = {
+      maxCandidateFrac: Double = 0.125,
+      minCorpusDocs: Long = 100000L): Unit = {
     install(spark)
     val ice = new IceTable(root, spark.sparkContext.hadoopConfiguration)
     val snap = ice.completedSteps
     val nDocs = snap("docs").rowCount
     if (nDocs < minCorpusDocs) { entries.remove(root); return }
-    // re-registering an unchanged snapshot with unchanged gate knobs is a
-    // no-op: the dict collect below is a Spark job, and callers re-register
-    // per query defensively
+    // re-registering an unchanged snapshot with an unchanged gate is a
+    // no-op: callers re-register per query defensively
     val prev = entries.get(root)
     if (prev != null && prev.snapshot.get("dict") == snap.get("dict") &&
         prev.snapshot.get("corpus") == snap.get("corpus") &&
-        prev.params == ((maxCandidateFrac, hotTermCap, dictCacheMax))) return
+        prev.maxCandidateFrac == maxCandidateFrac) return
     val cs = snap("corpus")
     val files = cs.files.map { case (f, _) => normalize(s"${cs.table}/$f") }.toSet
-    val minDf = math.max(1L, (nDocs * maxCandidateFrac).toLong)
-    val dictRows = snap("dict").rowCount
-    if (dictRows <= dictCacheMax) {
-      // ONE collect serves both the hot-term gate and the plan-time termId
-      // resolution; per-append dict deltas are merged on the driver (df
-      // sums; one termId per term)
-      val merged = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-      ice.readSteps(spark, snap, "dict")
-        .select(col("term"), col("termId"), col("df"))
-        .collect().foreach { r =>
-          val t = r.getString(0)
-          merged.get(t) match {
-            case Some((id, df)) => merged(t) = (id, df + r.getLong(2))
-            case None => merged(t) = (r.getLong(1), r.getLong(2))
-          }
-        }
-      val hot =
-        if (maxCandidateFrac >= 1.0) Array.empty[String]
-        else merged.iterator.collect {
-          case (t, (_, df)) if df > minDf => t
-        }.toArray
-      val terms = merged.toArray
-      entries.put(root, Entry(root, snap, files, nDocs, hot,
-        terms.map(_._1), terms.map(_._2._1),
-        (maxCandidateFrac, hotTermCap, dictCacheMax)))
-    } else {
-      val hot =
-        if (maxCandidateFrac >= 1.0) Array.empty[String]
-        else ice.readSteps(spark, snap, "dict")
-          .groupBy(col("term"))
-          .agg(org.apache.spark.sql.functions.sum(col("df")).as("df"))
-          .filter(col("df") > minDf)
-          .orderBy(col("df").desc, col("term"))
-          .limit(hotTermCap)
-          .select("term").collect().map(_.getString(0))
-      entries.put(root, Entry(root, snap, files, nDocs, hot, null, null,
-        (maxCandidateFrac, hotTermCap, dictCacheMax)))
-    }
+    val dict = TermDict.of(spark, ice, snap)
+    val hot =
+      if (maxCandidateFrac >= 1.0) Array.empty[String]
+      else dict.hotTerms(math.max(1L, (nDocs * maxCandidateFrac).toLong))
+    entries.put(root, Entry(ice, snap, files, hot, dict, maxCandidateFrac))
   }
 
   def deregister(root: String): Unit = entries.remove(root)
@@ -250,10 +209,10 @@ object IndexFilterRewrite {
         rel <- leafRelation(child)
         entry <- findEntry(rel)
         docId <- child.output.find(_.name == "docId")
-        // first conjunct that the index can serve AND that passes the
+        // every conjunct that the index can serve AND that passes the
         // selectivity gate: a pattern inside a hot term pulls that term's
         // whole postings into the candidate set, so the scan filter is the
-        // better access path for it (see register's scaladoc) — but a later
+        // better access path for it (see register's scaladoc) — but another
         // selective conjunct of the same filter still prunes for the whole
         // conjunction (semi-join candidates are a superset of ITS matches,
         // hence of the AND's)
@@ -328,53 +287,23 @@ object IndexFilterRewrite {
     /** Candidate docIds as an analyzed+optimized subplan, built fresh per
       * firing (fresh exprIds, so two rewrites in one query never collide):
       * dict terms containing any folded pattern → their posting blocks →
-      * exploded, distinct docIds. Fully declarative — the rule runs no jobs;
-      * dict terms are folded so one case-SENSITIVE containment scan serves
-      * both original case modes, and wholeWord is dropped (a mid-token
-      * occurrence still names candidate terms; the retained predicate
-      * enforces boundaries).
+      * exploded, distinct docIds. The rule runs no job unless the dict is
+      * too big to hold on the driver ([[TermDict.Scanned]]); dict terms are
+      * folded, so one case-SENSITIVE containment match of the folded
+      * patterns serves both original case modes, and wholeWord is dropped
+      * (a mid-token occurrence still names candidate terms; the retained
+      * predicate enforces boundaries).
       */
     private def candidatePlan(spark: SparkSession, e: Entry,
         folded: Seq[String]): LogicalPlan = {
-      val ice = new IceTable(e.root, spark.sparkContext.hadoopConfiguration)
-      val postings = ice.readSteps(spark, e.snapshot, "postings")
+      val postings = e.ice.readSteps(spark, e.snapshot, "postings")
         .select(col("termId"), col("docs"), col("n"))
-      // plan-time termId resolution over the register-time dict cache (pure
-      // driver CPU through the same matcher the dict-scan plan compiles):
-      // the candidate plan loses its dict-scan job AND its dict join — the
+      // plan-time termId resolution through the snapshot's dict: the
       // `termId IN (...)` predicate pushes down to the postings parquet
       // scan, whose files are (termId, docId)-sorted, so row-group min/max
-      // pruning reads only the matching terms' blocks. Falls back to the
-      // declarative dict-scan join when the dict was too big to pin or the
-      // IN list would bloat the plan.
-      val matchedIds: Array[Long] =
-        if (e.dictTerms == null) null
-        else {
-          val m = new graft.krep.KrepMatcher(KrepParams(folded))
-          val b = Array.newBuilder[Long]
-          var i = 0
-          while (i < e.dictTerms.length) {
-            if (m.contains(UTF8String.fromString(e.dictTerms(i))))
-              b += e.dictTermIds(i)
-            i += 1
-          }
-          b.result()
-        }
-      val pruned =
-        if (matchedIds != null && matchedIds.length <= 4096)
-          postings.filter(col("termId").isin(
-            matchedIds.map(java.lang.Long.valueOf).toSeq: _*))
-        else {
-          // distinct: per-append dict deltas repeat (termId, term) pairs,
-          // and a duplicated build side would duplicate joined blocks
-          // (the trailing docId distinct would still dedupe — this keeps
-          // the join's work proportional to matching terms)
-          val dict = ice.readSteps(spark, e.snapshot, "dict")
-            .filter(graft.krep.functions.krep_contains(col("term"),
-              KrepParams(folded)))
-            .select(col("termId")).distinct()
-          postings.join(dict, "termId")
-        }
+      // pruning reads only the matching terms' blocks
+      val pruned = postings.filter(col("termId").isin(
+        e.dict.matchingTermIds(folded).map(java.lang.Long.valueOf).toSeq: _*))
       val docIds = GraftSqlBridge.column(BlockDocIds(
         GraftSqlBridge.expression(col("docs")),
         GraftSqlBridge.expression(col("n"))))

@@ -10,9 +10,11 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Distributed BM25 top-k over the segmented inverted index (SURVEY.md §3.4).
   *
   * Plan shape (scale-first):
-  *  1. query terms → dict lookup: a parquet scan FILTERED on `term` — the
-  *     dict is written sorted by term, so row-group min/max pruning reads a
-  *     handful of pages; result is a ≤|query| row collect.
+  *  1. query terms → (termId, df) through the snapshot's [[TermDict]]: a
+  *     binary search over the driver-resident dict, zero Spark jobs. Above
+  *     [[TermDict.ResidentMaxRows]] dict rows it is a parquet scan filtered
+  *     on `term` — the dict is written sorted by term, so row-group min/max
+  *     pruning reads a handful of pages; result is a ≤|query| row collect.
   *  2. posting blocks for those termIds only: parquet scan with an
   *     `termId IN (...)` pushdown over files sorted by (termId, docId) —
   *     row-group skipping makes this read proportional to the query's
@@ -60,16 +62,8 @@ final class QueryEngine(spark: SparkSession, val root: String,
 
   import QueryEngine.TermMeta
 
-  /** Small dictionaries are cached on the driver after the first lookup (the
-    * analog of a search node's in-memory term dictionary): term resolution
-    * then costs zero Spark jobs. Above the threshold (10^12-doc scale) the
-    * lookup is a parquet scan pruned on `term` — the dict is written sorted
-    * by term, so row-group min/max skipping reads a handful of pages.
-    */
-  private val dictCacheThreshold = 500000L
-  @volatile private var dictCache: Map[String, (Long, Long)] = _
-
-  private def dictRowCount: Long = snapshot("dict").rowCount
+  /** This snapshot's term dictionary, loaded on the first lookup. */
+  private lazy val dict: TermDict = TermDict.of(spark, ice, snapshot)
 
   /** Postings relation, pinned in executor memory when the index is small
     * enough (a search tier keeps its segments hot; in-memory batch stats
@@ -148,60 +142,63 @@ final class QueryEngine(spark: SparkSession, val root: String,
   @transient private lazy val segmentPool: java.util.concurrent.ExecutorService =
     QueryEngine.segmentPool(math.max(2, spark.sparkContext.defaultParallelism))
 
-  /** Merge (term, termId, df) rows into term → (termId, dfTotal): the dict
-    * is base + per-append DELTA files (partial df per file, one termId per
-    * term), so totals resolve by summation — Lucene's per-segment
-    * dictionary read, done on the driver for collected row sets.
+  /** Driver strategies: sort the fetched blocks by (segId, firstDoc) and
+    * split them into one contiguous run per segment, so each per-segment
+    * kernel gets its blocks in order with no per-query hash-map grouping
+    * (allocation churn under concurrent serving-tier queries).
     */
-  private def mergeDictRows(
-      rows: Array[org.apache.spark.sql.Row]): Map[String, (Long, Long)] = {
-    val m = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-    rows.foreach { r =>
-      val t = r.getString(0)
-      m.get(t) match {
-        case Some((id, df)) => m(t) = (id, df + r.getLong(2))
-        case None => m(t) = (r.getLong(1), r.getLong(2))
-      }
+  private def segmentRuns[B <: AnyRef](all: Array[B])(segId: B => Long,
+      firstDoc: B => Long): Vector[Iterator[B]] = {
+    java.util.Arrays.sort(all, (a: B, b: B) => {
+      val c = java.lang.Long.compare(segId(a), segId(b))
+      if (c != 0) c else java.lang.Long.compare(firstDoc(a), firstDoc(b))
+    })
+    val runs = Vector.newBuilder[Iterator[B]]
+    var s = 0
+    while (s < all.length) {
+      var e = s
+      while (e < all.length && segId(all(e)) == segId(all(s))) e += 1
+      runs += all.iterator.slice(s, e)
+      s = e
     }
-    m.toMap
+    runs.result()
   }
 
-  private def ensureDictCache(): Map[String, (Long, Long)] = {
-    if (dictCache == null) synchronized {
-      if (dictCache == null) {
-        dictCache = mergeDictRows(readPinned("dict")
-          .select($"term", $"termId", $"df").collect())
-      }
-    }
-    dictCache
+  /** Exact top-k of a per-segment `kernel` over the posting blocks of
+    * `ids`, by three physical strategies with identical semantics (the
+    * analog of the reference's single-chunk inline fast path,
+    * krep.c:2886-2889):
+    *  - a driver-cacheable index: blocks from the driver-resident cache, the
+    *    kernel inline per segment run — zero Spark jobs;
+    *  - a query whose total posting count `postings` (Σ df, known for free
+    *    from the dict lookup) is small: one pruned-scan job, the kernel
+    *    inline per segment run;
+    *  - otherwise the kernel fans out per segment across executors.
+    */
+  private def topKBySegment(ids: Array[Long], postings: Long, k: Int)(
+      kernel: Iterator[PostingBlock] => Iterator[ScoredDoc]): Array[ScoredDoc] = {
+    def inline(all: Array[PostingBlock]): Array[ScoredDoc] =
+      segmentRuns(all)(_.segId, _.firstDoc).flatMap(kernel)
+        .toArray.sortBy(d => (-d.score, d.docId)).take(k)
+    if (driverCacheable)
+      return inline(ids.flatMap(id => driverBlocks.getOrElse(id, Array.empty[PostingBlock])))
+    val blocks = postingsDs.filter($"termId".isin(ids.toSeq: _*)).as[PostingBlock]
+    if (postings <= localPostingsThreshold) inline(blocks.collect())
+    else blocks.groupByKey(_.segId).flatMapGroups((_, it) => kernel(it))
+      .orderBy($"score".desc, $"docId".asc).limit(k).collect()
   }
 
-  private def lookupTerms(terms: Array[String]): Array[TermMeta] = {
-    if (terms.isEmpty) return Array.empty
-    val byTerm: String => Option[(Long, Long)] =
-      if (dictRowCount <= dictCacheThreshold) {
-        ensureDictCache().get
-      } else {
-        mergeDictRows(readPinned("dict")
-          .filter($"term".isin(terms.toSeq: _*))
-          .select($"term", $"termId", $"df")
-          .collect()).get
-      }
-    terms.zipWithIndex.flatMap { case (t, i) =>
-      byTerm(t).map { case (id, df) =>
-        TermMeta(i, id, df, Bm25.idf(stats.n, df))
-      }
+  private def lookupTerms(terms: Array[String]): Array[TermMeta] =
+    if (terms.isEmpty) Array.empty
+    else dict.lookup(terms).zipWithIndex.collect { case (Some((id, df)), i) =>
+      TermMeta(i, id, df, Bm25.idf(stats.n, df))
     }
-  }
 
   /** Exact top-k (docId, score), ties docId ASC — rank-identical to the
     * brute-force oracle.
     *
-    * Two physical strategies with identical semantics (the analog of the
-    * reference's single-chunk inline fast path, krep.c:2886-2889): when the
-    * query's total posting count (Σ df, known for free from the dict lookup)
-    * is small, blocks are collected and WAND runs on the driver — one Spark
-    * job instead of three. Big queries fan out per segment across executors.
+    * Per-segment block-max WAND under the three strategies of
+    * [[topKBySegment]].
     */
   def search(query: String, k: Int): Array[ScoredDoc] =
     searchTerms(canonicalTerms(query), k)
@@ -226,35 +223,12 @@ final class QueryEngine(spark: SparkSession, val root: String,
       graft.krep.KrepParams(Seq(pattern), regex = true, overlapping = false),
       maxExpand), k)
 
-  /** Dict-side pattern expansion. The dict is the small relation (terms, not
-    * docs): cached in memory below the threshold, otherwise one columnar scan
-    * filtered by the krep matcher expression. Expansion is capped at
-    * `maxExpand` terms by DESCENDING df (the reference caps patterns at 1024,
-    * krep.c:3571; hottest terms dominate a disjunctive score).
+  /** Dict-side pattern expansion ([[TermDict.expand]]): the matching terms
+    * with the `maxExpand` highest dfs, term-sorted.
     */
   def expandPatterns(params: graft.krep.KrepParams, maxExpand: Int)
-      : Array[String] = {
-    val matched: Array[(String, Long)] =
-      if (dictRowCount <= dictCacheThreshold) {
-        val m = new graft.krep.KrepMatcher(params)
-        ensureDictCache().iterator.collect {
-          case (t, (_, df)) if m.contains(UTF8String.fromString(t)) => (t, df)
-        }.toArray
-      } else {
-        // the df-descending cap is applied INSIDE the scan (TakeOrdered):
-        // a short pattern over a 10^9-term dict must not collect every
-        // matching term to the driver. Per-append dict deltas are summed
-        // BEFORE the cap so a term split across deltas ranks by its total.
-        readPinned("dict")
-          .filter(graft.krep.functions.krep_contains($"term", params))
-          .groupBy($"term").agg(org.apache.spark.sql.functions.sum($"df").as("df"))
-          .orderBy($"df".desc, $"term")
-          .limit(maxExpand)
-          .as[(String, Long)].collect()
-      }
-    matched.sortBy { case (t, df) => (-df, t) }.take(maxExpand)
-      .map(_._1).distinct.sorted
-  }
+      : Array[String] =
+    dict.expand(params, maxExpand)
 
   /** Exact disjunctive top-k over an explicit canonical (distinct, sorted)
     * term set — the kernel behind [[search]]/[[searchMultiPattern]]/
@@ -270,11 +244,6 @@ final class QueryEngine(spark: SparkSession, val root: String,
     val avgdl = stats.avgdl
     val k0 = k
 
-    // lazy: only the non-driver-cached strategies materialize this
-    def blocks = postingsDs
-      .filter($"termId".isin(ids.toSeq: _*))
-      .as[PostingBlock]
-
     def wandOnSegment(segBlocks: Iterator[PostingBlock]): Iterator[ScoredDoc] = {
       val bySlot = Array.fill(nTerms)(
         scala.collection.mutable.ArrayBuffer.empty[PostingBlock])
@@ -284,42 +253,7 @@ final class QueryEngine(spark: SparkSession, val root: String,
       BlockMaxWand.topK(termBlocks, idfs, avgdl, k0).iterator
     }
 
-    // driver strategies: one (segId, firstDoc) sort, then WAND per
-    // contiguous segment run — no per-query hash-map grouping (allocation
-    // churn under concurrent serving-tier queries)
-    def wandBySegmentRuns(all: Array[PostingBlock]): Array[ScoredDoc] = {
-      java.util.Arrays.sort(all, (a: PostingBlock, b: PostingBlock) => {
-        val c = java.lang.Long.compare(a.segId, b.segId)
-        if (c != 0) c else java.lang.Long.compare(a.firstDoc, b.firstDoc)
-      })
-      val out = scala.collection.mutable.ArrayBuffer.empty[ScoredDoc]
-      var s = 0
-      while (s < all.length) {
-        var e = s
-        while (e < all.length && all(e).segId == all(s).segId) e += 1
-        out ++= wandOnSegment(all.iterator.slice(s, e))
-        s = e
-      }
-      out.toArray.sortBy(d => (-d.score, d.docId)).take(k)
-    }
-
-    if (driverCacheable) {
-      // serving-tier strategy: zero Spark jobs — blocks come from the
-      // driver-resident term-keyed cache, WAND runs inline
-      wandBySegmentRuns(metas.iterator
-        .flatMap(m => driverBlocks.getOrElse(m.termId, Array.empty[PostingBlock]))
-        .toArray)
-    } else if (metas.map(_.df).sum <= localPostingsThreshold) {
-      // driver-local strategy: one pruned-scan job, WAND per segment inline
-      wandBySegmentRuns(blocks.collect())
-    } else {
-      blocks
-        .groupByKey(_.segId)
-        .flatMapGroups((_, it) => wandOnSegment(it))
-        .orderBy($"score".desc, $"docId".asc)
-        .limit(k)
-        .collect()
-    }
+    topKBySegment(ids, metas.map(_.df).sum, k)(wandOnSegment)
   }
 
   /** Conjunctive query mode with optional exclusion: exact BM25 top-k over
@@ -358,10 +292,6 @@ final class QueryEngine(spark: SparkSession, val root: String,
     val avgdl = stats.avgdl
     val k0 = k
 
-    def blocks = postingsDs
-      .filter($"termId".isin(ids.toSeq: _*))
-      .as[PostingBlock]
-
     // per-segment top-k: match count within one segment is bounded by the
     // segment's doc span, and only <= k rows leave the segment
     def conjOnSegment(segBlocks: Iterator[PostingBlock]): Iterator[ScoredDoc] = {
@@ -381,37 +311,8 @@ final class QueryEngine(spark: SparkSession, val root: String,
         .toArray.sortBy(d => (-d.score, d.docId)).take(k0).iterator
     }
 
-    def bySegmentRuns(all: Array[PostingBlock]): Array[ScoredDoc] = {
-      java.util.Arrays.sort(all, (a: PostingBlock, b: PostingBlock) => {
-        val c = java.lang.Long.compare(a.segId, b.segId)
-        if (c != 0) c else java.lang.Long.compare(a.firstDoc, b.firstDoc)
-      })
-      val out = scala.collection.mutable.ArrayBuffer.empty[ScoredDoc]
-      var s = 0
-      while (s < all.length) {
-        var e = s
-        while (e < all.length && all(e).segId == all(s).segId) e += 1
-        out ++= conjOnSegment(all.iterator.slice(s, e))
-        s = e
-      }
-      out.toArray.sortBy(d => (-d.score, d.docId)).take(k)
-    }
-
-    if (driverCacheable) {
-      bySegmentRuns(ids.iterator
-        .flatMap(id => driverBlocks.getOrElse(id, Array.empty[PostingBlock]))
-        .toArray)
-    } else if ((metas.map(_.df).sum + exclMetas.map(_.df).sum)
-        <= localPostingsThreshold) {
-      bySegmentRuns(blocks.collect())
-    } else {
-      blocks
-        .groupByKey(_.segId)
-        .flatMapGroups((_, it) => conjOnSegment(it))
-        .orderBy($"score".desc, $"docId".asc)
-        .limit(k)
-        .collect()
-    }
+    topKBySegment(ids, metas.map(_.df).sum + exclMetas.map(_.df).sum, k)(
+      conjOnSegment)
   }
 
   /** Exact phrase search (SURVEY.md §3.4), positional-index path:
@@ -470,24 +371,12 @@ final class QueryEngine(spark: SparkSession, val root: String,
     // on one phrase instead of walking a hot term's blocks single-threaded;
     // results merge by a deterministic final sort
     def matchSegmentsParallel(all: Array[PosPostingBlock]): Array[(Long, Double)] = {
-      java.util.Arrays.sort(all, (a: PosPostingBlock, b: PosPostingBlock) => {
-        val c = java.lang.Long.compare(a.segId, b.segId)
-        if (c != 0) c else java.lang.Long.compare(a.firstDoc, b.firstDoc)
-      })
-      val runs = Vector.newBuilder[(Int, Int)]
-      var s = 0
-      while (s < all.length) {
-        var e = s
-        while (e < all.length && all(e).segId == all(s).segId) e += 1
-        runs += ((s, e))
-        s = e
-      }
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext =
         ExecutionContext.fromExecutorService(segmentPool)
-      val futs = runs.result().map { case (lo, hi) =>
-        Future(segMatches(all.iterator.slice(lo, hi)).toArray)
+      val futs = segmentRuns(all)(_.segId, _.firstDoc).map { run =>
+        Future(segMatches(run).toArray)
       }
       Await.result(Future.sequence(futs), Duration.Inf).toArray.flatten
     }

@@ -67,6 +67,25 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("fused kernels are null-intolerant: NULL text gives NULL, not an empty value") {
+    import spark.implicits._
+    val df = Seq((0L, null: String), (1L, "")).toDF("id", "text")
+    val rows = df.select($"id",
+        TextOps.shinglesKernel($"text", 3).as("sh"),
+        TextOps.minhashShingleSigPoly($"text", k = 32).as("sig"),
+        kernels.simhash31($"text").as("simhash"))
+      .select($"id", $"sh", $"sig", $"simhash",
+        TextOps.bandHashesPolyAll($"sig", bands = 8, rows = 4).as("bands"))
+      .orderBy($"id").collect()
+    val Array(nul, empty) = rows
+    (1 to 4).foreach(c => assert(nul.isNullAt(c), s"column ${nul.schema(c).name}"))
+    // the empty string is a value: no shingles, all-P signature, 0 simhash
+    assert(empty.getSeq[String](1).isEmpty)
+    assert(empty.getSeq[Long](2) == Seq.fill(32)(TextOps.HashP))
+    assert(empty.getLong(3) == 0L)
+    assert(!empty.isNullAt(4))
+  }
+
   test("minhash/jaccard band joins move bare ids — signatures join back post-dedup") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Join, LogicalPlan}
     import spark.implicits._
