@@ -341,15 +341,24 @@ final class IceTable(val root: String, conf: Configuration) {
   }
 
   /** Offline maintenance: delete data files of `table` that NO snapshot in
-    * the log references — the orphans left behind by crashed appends. Safe
-    * with concurrent readers (they only resolve committed manifests) but NOT
-    * with a concurrent in-flight append (its files are unreferenced until it
-    * commits) — run it between batches, like Iceberg's remove-orphan-files.
+    * the log references — the orphans left behind by crashed appends — and
+    * everything under `<root>/scratch/`, where a build or append killed
+    * inside `writePostings` leaves its doc-length sidecar. Safe with
+    * concurrent readers (they only resolve committed manifests) but NOT
+    * with a concurrent in-flight build or append (its files are
+    * unreferenced until it commits, and its sidecar is live until it
+    * finishes) — run it between batches, like Iceberg's remove-orphan-files.
     * Returns the deleted paths.
     */
   def vacuum(table: String): Seq[String] = {
+    val scratch = new Path(root, "scratch")
+    val deadScratch = if (!fs.exists(scratch)) Nil
+      else fs.listStatus(scratch).toSeq.map { st =>
+        fs.delete(st.getPath, true)
+        scratchPath(st.getPath.getName)
+      }
     val dir = new Path(tablePath(table))
-    if (!fs.exists(dir)) return Nil
+    if (!fs.exists(dir)) return deadScratch
     // union of the table's file lists across EVERY snapshot (old snapshots
     // stay queryable until their log entries are expired)
     var committed = false // any snapshot has a step for this table at all
@@ -405,7 +414,7 @@ final class IceTable(val root: String, conf: Configuration) {
           !walk(st.getPath, "").exists(_._2.endsWith(".parquet")))
         fs.delete(st.getPath, true)
     }
-    deleted
+    deadScratch ++ deleted
   }
 
   /** Expire old snapshot log entries: keep the newest `keepLast` (>= 1)

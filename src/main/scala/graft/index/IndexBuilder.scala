@@ -9,6 +9,23 @@ import org.apache.spark.util.SerializableConfiguration
 import graft.corpus.Page
 import graft.krep.{functions => K}
 
+/** The block fields every query kernel reads, shared by [[PostingBlock]]
+  * and [[PosPostingBlock]]: one posting cursor (`graft.query.PostingCursor`)
+  * and one segment bucketing serve both row shapes.
+  */
+trait BlockFields {
+  def termId: Long
+  def segId: Long
+  def firstDoc: Long
+  def lastDoc: Long
+  def n: Int
+  def maxTf: Int
+  def minDl: Int
+  def docs: Array[Byte]
+  def tfs: Array[Byte]
+  def dls: Array[Byte]
+}
+
 /** One compressed posting block: ≤ blockSize postings of one term, never
   * spanning a docId segment boundary. docIds delta+varint; tf/dl varint.
   * maxTf/minDl give the block's BM25 upper bound at query time (block-max
@@ -24,7 +41,7 @@ final case class PostingBlock(
     minDl: Int,
     docs: Array[Byte],
     tfs: Array[Byte],
-    dls: Array[Byte])
+    dls: Array[Byte]) extends BlockFields
 
 /** The stored posting-block row: [[PostingBlock]] plus the positional payload
   * `poss` (per-posting token-ordinal lists, delta+varint — lengths are the tf
@@ -42,7 +59,7 @@ final case class PosPostingBlock(
     docs: Array[Byte],
     tfs: Array[Byte],
     dls: Array[Byte],
-    poss: Array[Byte])
+    poss: Array[Byte]) extends BlockFields
 
 object PostingBlock {
   /** Column list of the positions-free WAND projection. */

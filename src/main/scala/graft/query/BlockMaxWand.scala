@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.index.{BlockCodec, PostingBlock}
+import graft.index.PostingBlock
 
 final case class ScoredDoc(docId: Long, score: Double)
 
@@ -19,86 +19,28 @@ final case class ScoredDoc(docId: Long, score: Double)
   */
 object BlockMaxWand {
 
-  /** Posting iterator over one term's blocks within a segment, sorted by
-    * firstDoc; decodes a block only when the cursor enters it.
+  /** [[PostingCursor]] plus the WAND bounds: the term's upper bound over
+    * all its blocks in the segment, the current block's bound, and the
+    * current posting's BM25 addend.
     */
-  private final class TermIter(val termIdx: Int, val idf: Double,
-      blocks: Array[PostingBlock], avgdl: Double) {
-    // blocks sorted by firstDoc (disjoint ranges within the segment)
-    private var bi = 0
-    private var docs: Array[Long] = _
-    private var tfs: Array[Int] = _
-    private var dls: Array[Int] = _
-    private var pos = 0
-    var exhausted: Boolean = blocks.isEmpty
-    if (!exhausted) load()
-
-    /** Term-level upper bound across all remaining blocks (WAND UB). */
+  private final class TermIter(idf: Double, blocks: Array[PostingBlock],
+      avgdl: Double) extends PostingCursor(blocks) {
+    private def upperBound(b: PostingBlock): Double =
+      Bm25.blockUpperBound(idf, b.maxTf, b.minDl, avgdl)
     val termUpperBound: Double = {
       var ub = 0.0
-      var i = 0
-      while (i < blocks.length) {
-        val b = Bm25.blockUpperBound(idf, blocks(i).maxTf, blocks(i).minDl, avgdl)
-        if (b > ub) ub = b
-        i += 1
-      }
+      blocks.foreach(b => ub = math.max(ub, upperBound(b)))
       ub
     }
-
-    private def load(): Unit = {
-      val b = blocks(bi)
-      docs = BlockCodec.decodeDeltaLongs(b.docs, b.n)
-      tfs = BlockCodec.decodeInts(b.tfs, b.n)
-      dls = BlockCodec.decodeInts(b.dls, b.n)
-      pos = 0
-    }
-
-    def doc: Long = docs(pos)
-
-    /** BM25 upper bound of the CURRENT block (block-max refinement). */
-    def currentBlockUpperBound: Double =
-      Bm25.blockUpperBound(idf, blocks(bi).maxTf, blocks(bi).minDl, avgdl)
-
-    /** Last doc of the current block — the shallow-advance horizon. */
-    def currentBlockLastDoc: Long = blocks(bi).lastDoc
-
-    def addend: Double = Bm25.addend(idf, tfs(pos), dls(pos), avgdl)
-
-    /** Advance cursor to the first doc >= target. Skips whole blocks via
-      * their lastDoc without decoding them.
-      */
-    def advanceTo(target: Long): Unit = {
-      if (exhausted || docs(pos) >= target) return
-      if (blocks(bi).lastDoc < target) {
-        do bi += 1 while (bi < blocks.length && blocks(bi).lastDoc < target)
-        if (bi >= blocks.length) { exhausted = true; return }
-        load() // pos = 0; this block's lastDoc >= target
-      }
-      // binary search forward from pos for first doc >= target
-      var l = pos
-      var h = docs.length - 1
-      while (l < h) {
-        val m = (l + h) >>> 1
-        if (docs(m) < target) l = m + 1 else h = m
-      }
-      pos = l
-    }
-
-    def next(): Unit = {
-      if (exhausted) return
-      pos += 1
-      if (pos >= docs.length) {
-        bi += 1
-        if (bi >= blocks.length) exhausted = true else load()
-      }
-    }
+    def currentBlockUpperBound: Double = upperBound(block)
+    def addend: Double = Bm25.addend(idf, tf, dl, avgdl)
   }
 
   /** Bounded top-k heap ordered worst-first: (score ASC, docId DESC), so the
     * root is the entry the next candidate must beat. Ties: docId ASC wins.
     */
-  private final class TopK(k: Int) {
-    private val heap = new java.util.PriorityQueue[ScoredDoc](k,
+  private final class TopK(k: Int, capacity: Int) {
+    private val heap = new java.util.PriorityQueue[ScoredDoc](capacity,
       (a: ScoredDoc, b: ScoredDoc) => {
         val c = java.lang.Double.compare(a.score, b.score)
         if (c != 0) c else java.lang.Long.compare(b.docId, a.docId)
@@ -133,9 +75,13 @@ object BlockMaxWand {
     */
   def topK(termBlocks: Array[Array[PostingBlock]], idfs: Array[Double],
       avgdl: Double, k: Int): Array[ScoredDoc] = {
-    val iters = termBlocks.indices.map(i =>
-      new TermIter(i, idfs(i), termBlocks(i), avgdl)).toArray
-    val topk = new TopK(k)
+    val iters = Array.tabulate(termBlocks.length)(i =>
+      new TermIter(idfs(i), termBlocks(i), avgdl))
+    // the heap never holds more docs than the segment has postings, so a
+    // huge k costs nothing up front
+    var postings = 0L
+    termBlocks.foreach(_.foreach(postings += _.n))
+    val topk = new TopK(k, math.max(1, math.min(k.toLong, postings)).toInt)
     // zero allocation inside the loop: `active(0 until n)` is kept sorted by
     // current doc with an in-place insertion sort (n ≤ #query terms, tiny) —
     // the previous per-iteration `sortBy` copy was the dominant allocation
@@ -189,7 +135,7 @@ object BlockMaxWand {
             var horizon = Long.MaxValue
             var j2 = 0
             while (j2 <= pe) {
-              val h = active(j2).currentBlockLastDoc
+              val h = active(j2).block.lastDoc
               if (h < horizon) horizon = h
               j2 += 1
             }

@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.index.{BlockCodec, PostingBlock}
+import graft.index.PostingBlock
 
 /** Per-segment conjunctive (all-terms) intersection — the index lift of the
   * shell idiom `krep p1 FILE | krep p2` (each pipe stage ANDs another
@@ -10,62 +10,13 @@ import graft.index.{BlockCodec, PostingBlock}
   * conjunctive results are exactly the disjunctive scores restricted to the
   * intersection.
   *
-  * Positions are never touched: cursors run over the positions-free
-  * [[PostingBlock]] projection (parquet is columnar — `poss` stays on disk),
-  * zipper-merging by docId with whole-block skipping via `lastDoc`.
+  * Owns the one leapfrog loop ([[leapfrog]]) that [[PhraseSearch]] reuses.
+  * Positions are never touched here: [[PostingCursor]]s run over the
+  * positions-free [[PostingBlock]] projection (parquet is columnar — `poss`
+  * stays on disk), zipper-merging by docId with whole-block skipping via
+  * `lastDoc`.
   */
 object ConjunctiveSearch {
-
-  /** Decoding cursor over one term's blocks within a segment (sorted by
-    * firstDoc) — [[PhraseSearch.PosCursor]] minus the positional payload.
-    */
-  final class Cursor(blocks: Array[PostingBlock]) {
-    private var bi = 0
-    private var docs: Array[Long] = _
-    private var tfs: Array[Int] = _
-    private var dls: Array[Int] = _
-    private var pos = 0
-    var exhausted: Boolean = blocks.isEmpty
-    if (!exhausted) load()
-
-    private def load(): Unit = {
-      val b = blocks(bi)
-      docs = BlockCodec.decodeDeltaLongs(b.docs, b.n)
-      tfs = BlockCodec.decodeInts(b.tfs, b.n)
-      dls = BlockCodec.decodeInts(b.dls, b.n)
-      pos = 0
-    }
-
-    def doc: Long = docs(pos)
-    def tf: Int = tfs(pos)
-    def dl: Int = dls(pos)
-
-    /** First doc >= target; whole blocks skipped via lastDoc undecoded. */
-    def advanceTo(target: Long): Unit = {
-      if (exhausted || docs(pos) >= target) return
-      if (blocks(bi).lastDoc < target) {
-        do bi += 1 while (bi < blocks.length && blocks(bi).lastDoc < target)
-        if (bi >= blocks.length) { exhausted = true; return }
-        load()
-      }
-      var l = pos
-      var h = docs.length - 1
-      while (l < h) {
-        val m = (l + h) >>> 1
-        if (docs(m) < target) l = m + 1 else h = m
-      }
-      pos = l
-    }
-
-    def next(): Unit = {
-      if (exhausted) return
-      pos += 1
-      if (pos >= docs.length) {
-        bi += 1
-        if (bi >= blocks.length) exhausted = true else load()
-      }
-    }
-  }
 
   /** All conjunctive matches in one segment, in docId order. Emits at most
     * one row per doc; per-segment match count is bounded by the segment's
@@ -81,76 +32,64 @@ object ConjunctiveSearch {
   def segmentMatches(slotBlocks: Array[Array[PostingBlock]],
       idfs: Array[Double], avgdl: Double,
       exclBlocks: Array[Array[PostingBlock]] = Array.empty)
-      : Iterator[ScoredDoc] = {
-    val nSlots = slotBlocks.length
-    val cursors = slotBlocks.map(new Cursor(_))
-    if (cursors.exists(_.exhausted)) return Iterator.empty
-    val excl = exclBlocks.map(new Cursor(_)).filterNot(_.exhausted)
-    val nExcl = excl.length
+      : Iterator[ScoredDoc] =
+    leapfrog(slotBlocks.map(new PostingCursor(_)),
+      exclBlocks.map(new PostingCursor(_)), idfs, avgdl)(accept = true)
 
-    new Iterator[ScoredDoc] {
-      private var pendingDoc = -1L
-      private var pendingScore = 0.0
-      private var done = false
-
-      private def seek(): Unit = {
-        while (pendingDoc < 0 && !done) {
-          // leapfrog: align every cursor on the current max doc
-          var target = cursors(0).doc
-          var i = 1
-          while (i < nSlots) {
-            if (cursors(i).doc > target) target = cursors(i).doc
-            i += 1
+  /** The leapfrog loop: aligns every slot cursor on the current max doc; an
+    * aligned doc that no exclusion cursor sits on and that passes `accept`
+    * is emitted with its ascending-slot BM25 fold (the disjunctive path's
+    * and the oracle's summation order). `accept` sees the cursors parked on
+    * the doc. Matches come back in docId order, materialized per segment.
+    */
+  private[query] def leapfrog(cursors: Array[_ <: PostingCursor[_]],
+      excl: Array[PostingCursor[PostingBlock]], idfs: Array[Double],
+      avgdl: Double)(accept: => Boolean): Iterator[ScoredDoc] = {
+    val out = Array.newBuilder[ScoredDoc]
+    val nSlots = cursors.length
+    var live = nSlots > 0 && !cursors.exists(_.exhausted)
+    while (live) {
+      var target = cursors(0).doc
+      var i = 1
+      while (i < nSlots) {
+        if (cursors(i).doc > target) target = cursors(i).doc
+        i += 1
+      }
+      var aligned = true
+      i = 0
+      while (live && i < nSlots) {
+        cursors(i).advanceTo(target)
+        if (cursors(i).exhausted) live = false
+        else if (cursors(i).doc != target) aligned = false
+        i += 1
+      }
+      if (live && aligned) {
+        // NOT filter: an exclusion cursor sitting exactly on the aligned doc
+        // vetoes it (exhausted exclusion cursors stay exhausted)
+        var vetoed = false
+        var x = 0
+        while (x < excl.length) {
+          excl(x).advanceTo(target)
+          if (!excl(x).exhausted && excl(x).doc == target) vetoed = true
+          x += 1
+        }
+        if (!vetoed && accept) {
+          var score = 0.0
+          var s = 0
+          while (s < nSlots) {
+            score += Bm25.addend(idfs(s), cursors(s).tf, cursors(s).dl, avgdl)
+            s += 1
           }
-          var aligned = true
-          i = 0
-          while (i < nSlots) {
-            cursors(i).advanceTo(target)
-            if (cursors(i).exhausted) { done = true; aligned = false }
-            else if (cursors(i).doc != target) aligned = false
-            i += 1
-          }
-          if (!done && aligned) {
-            // NOT filter: an exclusion cursor sitting exactly on the aligned
-            // doc vetoes it (exhausted exclusion cursors stop being checked)
-            var vetoed = false
-            var x = 0
-            while (x < nExcl) {
-              val c = excl(x)
-              if (!c.exhausted) {
-                c.advanceTo(target)
-                if (!c.exhausted && c.doc == target) vetoed = true
-              }
-              x += 1
-            }
-            if (!vetoed) {
-              // ascending-slot fold == the disjunctive path's summation order
-              var score = 0.0
-              var s = 0
-              while (s < nSlots) {
-                score += Bm25.addend(idfs(s), cursors(s).tf, cursors(s).dl, avgdl)
-                s += 1
-              }
-              pendingDoc = target
-              pendingScore = score
-            }
-            i = 0
-            while (i < nSlots) {
-              cursors(i).next()
-              if (cursors(i).exhausted) done = true
-              i += 1
-            }
-          }
+          out += ScoredDoc(target, score)
+        }
+        i = 0
+        while (i < nSlots) {
+          cursors(i).next()
+          if (cursors(i).exhausted) live = false
+          i += 1
         }
       }
-
-      override def hasNext: Boolean = { seek(); pendingDoc >= 0 }
-      override def next(): ScoredDoc = {
-        seek()
-        val r = ScoredDoc(pendingDoc, pendingScore)
-        pendingDoc = -1L
-        r
-      }
     }
+    out.result().iterator
   }
 }

@@ -7,74 +7,32 @@ import graft.index.{BlockCodec, PosPostingBlock}
   * tokens occur at consecutive token ordinals (positions are stored in the
   * posting blocks), and emits the doc with its exact BM25 score.
   *
-  * This replaces the round-1 per-posting `flatMap → groupBy(docId)` shape:
-  * nothing here shuffles — blocks arrive grouped by segment, cursors
-  * zipper-merge them in place, and positions decode lazily only for docs that
-  * survive the docId intersection. A hot term ("the"-class) costs a linear
-  * cursor walk inside its segment, never an N-row exchange.
+  * Nothing here shuffles: blocks arrive grouped by segment, and the
+  * conjunctive kernel's leapfrog loop ([[ConjunctiveSearch.leapfrog]])
+  * zipper-merges them in place with [[positionsMatch]] as its per-doc
+  * accept check. Positions decode lazily, once per visited block, and only
+  * for docs that survive the docId intersection. A hot term ("the"-class)
+  * costs a linear cursor walk inside its segment, never an N-row exchange.
   *
   * Scoring contract: identical to [[BlockMaxWand]] / the brute-force oracle —
   * addends summed in ascending canonical-term order, bit-identical folds.
   */
 object PhraseSearch {
 
-  /** Decoding cursor over one term's blocks within a segment (sorted by
-    * firstDoc). Unlike the WAND iterator it exposes per-posting positions;
-    * position bytes decode lazily, once per visited block.
+  /** [[PostingCursor]] plus lazy position decoding: a block's `poss` decode
+    * on the first [[positions]] call inside it.
     */
-  final class PosCursor(blocks: Array[PosPostingBlock]) {
-    private var bi = 0
-    private var docs: Array[Long] = _
-    private var tfs: Array[Int] = _
-    private var dls: Array[Int] = _
-    private var posLists: Array[Array[Int]] = _ // decoded on first positions()
-    private var pos = 0
-    var exhausted: Boolean = blocks.isEmpty
-    if (!exhausted) load()
-
-    private def load(): Unit = {
-      val b = blocks(bi)
-      docs = BlockCodec.decodeDeltaLongs(b.docs, b.n)
-      tfs = BlockCodec.decodeInts(b.tfs, b.n)
-      dls = BlockCodec.decodeInts(b.dls, b.n)
-      posLists = null
-      pos = 0
-    }
-
-    def doc: Long = docs(pos)
-    def tf: Int = tfs(pos)
-    def dl: Int = dls(pos)
+  private final class PosCursor(blocks: Array[PosPostingBlock])
+      extends PostingCursor(blocks) {
+    private var posLists: Array[Array[Int]] = _
+    private var posBlock: PosPostingBlock = _ // the block posLists belong to
 
     def positions: Array[Int] = {
-      if (posLists == null)
-        posLists = BlockCodec.decodePosLists(blocks(bi).poss, tfs)
-      posLists(pos)
-    }
-
-    /** First doc >= target; whole blocks skipped via lastDoc undecoded. */
-    def advanceTo(target: Long): Unit = {
-      if (exhausted || docs(pos) >= target) return
-      if (blocks(bi).lastDoc < target) {
-        do bi += 1 while (bi < blocks.length && blocks(bi).lastDoc < target)
-        if (bi >= blocks.length) { exhausted = true; return }
-        load()
+      if (posBlock ne block) {
+        posBlock = block
+        posLists = BlockCodec.decodePosLists(posBlock.poss, blockTfs)
       }
-      var l = pos
-      var h = docs.length - 1
-      while (l < h) {
-        val m = (l + h) >>> 1
-        if (docs(m) < target) l = m + 1 else h = m
-      }
-      pos = l
-    }
-
-    def next(): Unit = {
-      if (exhausted) return
-      pos += 1
-      if (pos >= docs.length) {
-        bi += 1
-        if (bi >= blocks.length) exhausted = true else load()
-      }
+      posLists(offset)
     }
   }
 
@@ -131,62 +89,9 @@ object PhraseSearch {
   def segmentMatches(slotBlocks: Array[Array[PosPostingBlock]],
       slotOffsets: Array[Array[Int]], idfs: Array[Double],
       avgdl: Double): Iterator[(Long, Double)] = {
-    val nSlots = slotBlocks.length
     val cursors = slotBlocks.map(new PosCursor(_))
-    if (cursors.exists(_.exhausted)) return Iterator.empty
-
-    new Iterator[(Long, Double)] {
-      private var pendingDoc = -1L
-      private var pendingScore = 0.0
-      private var done = false
-
-      private def seek(): Unit = {
-        while (pendingDoc < 0 && !done) {
-          // leapfrog: align every cursor on the current max doc
-          var target = cursors(0).doc
-          var i = 1
-          while (i < nSlots) {
-            if (cursors(i).doc > target) target = cursors(i).doc
-            i += 1
-          }
-          var aligned = true
-          i = 0
-          while (i < nSlots) {
-            cursors(i).advanceTo(target)
-            if (cursors(i).exhausted) { done = true; aligned = false }
-            else if (cursors(i).doc != target) aligned = false
-            i += 1
-          }
-          if (!done && aligned) {
-            val slotPositions = Array.tabulate(nSlots)(s => cursors(s).positions)
-            if (positionsMatch(slotPositions, slotOffsets)) {
-              // ascending-slot fold == the oracle's fixed-order summation
-              var score = 0.0
-              var s = 0
-              while (s < nSlots) {
-                score += Bm25.addend(idfs(s), cursors(s).tf, cursors(s).dl, avgdl)
-                s += 1
-              }
-              pendingDoc = target
-              pendingScore = score
-            }
-            i = 0
-            while (i < nSlots) {
-              cursors(i).next()
-              if (cursors(i).exhausted) done = true
-              i += 1
-            }
-          }
-        }
-      }
-
-      override def hasNext: Boolean = { seek(); pendingDoc >= 0 }
-      override def next(): (Long, Double) = {
-        seek()
-        val r = (pendingDoc, pendingScore)
-        pendingDoc = -1L
-        r
-      }
-    }
+    ConjunctiveSearch.leapfrog(cursors, Array.empty, idfs, avgdl)(
+      positionsMatch(cursors.map(_.positions), slotOffsets))
+      .map(d => (d.docId, d.score))
   }
 }

@@ -3,7 +3,9 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.index.{IceTable, IndexStats, PosPostingBlock, PostingBlock}
+import scala.reflect.ClassTag
+
+import graft.index.{BlockFields, IceTable, IndexStats, PosPostingBlock, PostingBlock}
 import graft.krep.KrepTokenize
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -60,7 +62,7 @@ final class QueryEngine(spark: SparkSession, val root: String,
     KrepTokenize.tokenize(UTF8String.fromString(query))
       .map(_.toString).distinct.sorted
 
-  import QueryEngine.TermMeta
+  import QueryEngine.{TermMeta, bySlot}
 
   /** This snapshot's term dictionary, loaded on the first lookup. */
   private lazy val dict: TermDict = TermDict.of(spark, ice, snapshot)
@@ -97,11 +99,13 @@ final class QueryEngine(spark: SparkSession, val root: String,
       .select(PostingBlock.wandColumns.map(c => $"$c"): _*).as[PostingBlock]
       .collect().groupBy(_.termId)
   }
-  /** Phrase-path twin of [[driverBlocks]]: full rows including positions.
+  /** Phrase-path twin of [[driverBlocks]]: full rows including `poss`,
+    * which the phrase kernel's cursor decodes lazily per visited block.
     * Loaded lazily, only if a phrase query runs on a driver-cacheable index.
     * Deliberate trade-off: an engine serving BOTH term and phrase queries
-    * holds the scoring columns twice (≤2x the cache threshold); keeping the
-    * caches independent means term-only engines never pay for positions.
+    * holds the scoring columns twice (each cache ≤ the block-row
+    * threshold); keeping the caches independent means term-only engines
+    * never pay for positions.
     */
   @transient private lazy val driverPosBlocks: Map[Long, Array[PosPostingBlock]] = {
     readPinned("postings").as[PosPostingBlock]
@@ -142,22 +146,18 @@ final class QueryEngine(spark: SparkSession, val root: String,
   @transient private lazy val segmentPool: java.util.concurrent.ExecutorService =
     QueryEngine.segmentPool(math.max(2, spark.sparkContext.defaultParallelism))
 
-  /** Driver strategies: sort the fetched blocks by (segId, firstDoc) and
-    * split them into one contiguous run per segment, so each per-segment
-    * kernel gets its blocks in order with no per-query hash-map grouping
-    * (allocation churn under concurrent serving-tier queries).
+  /** Driver strategies: sort the fetched blocks of either row shape (read
+    * through their shared [[BlockFields]]) by (segId, firstDoc) and split
+    * them into one contiguous run per segment — one unit of per-segment
+    * work, which [[QueryEngine.bySlot]] then splits by query slot.
     */
-  private def segmentRuns[B <: AnyRef](all: Array[B])(segId: B => Long,
-      firstDoc: B => Long): Vector[Iterator[B]] = {
-    java.util.Arrays.sort(all, (a: B, b: B) => {
-      val c = java.lang.Long.compare(segId(a), segId(b))
-      if (c != 0) c else java.lang.Long.compare(firstDoc(a), firstDoc(b))
-    })
+  private def segmentRuns[B <: BlockFields](all: Array[B]): Vector[Iterator[B]] = {
+    java.util.Arrays.sort(all, QueryEngine.bySegThenFirstDoc)
     val runs = Vector.newBuilder[Iterator[B]]
     var s = 0
     while (s < all.length) {
       var e = s
-      while (e < all.length && segId(all(e)) == segId(all(s))) e += 1
+      while (e < all.length && all(e).segId == all(s).segId) e += 1
       runs += all.iterator.slice(s, e)
       s = e
     }
@@ -178,7 +178,7 @@ final class QueryEngine(spark: SparkSession, val root: String,
   private def topKBySegment(ids: Array[Long], postings: Long, k: Int)(
       kernel: Iterator[PostingBlock] => Iterator[ScoredDoc]): Array[ScoredDoc] = {
     def inline(all: Array[PostingBlock]): Array[ScoredDoc] =
-      segmentRuns(all)(_.segId, _.firstDoc).flatMap(kernel)
+      segmentRuns(all).flatMap(kernel)
         .toArray.sortBy(d => (-d.score, d.docId)).take(k)
     if (driverCacheable)
       return inline(ids.flatMap(id => driverBlocks.getOrElse(id, Array.empty[PostingBlock])))
@@ -239,19 +239,14 @@ final class QueryEngine(spark: SparkSession, val root: String,
     if (metas.isEmpty) return Array.empty
     val ids = metas.map(_.termId)
     val idxOf = metas.map(m => m.termId -> m.termIdx).toMap
-    val idfOf = metas.map(m => m.termIdx -> m.idf).toMap
     val nTerms = metas.map(_.termIdx).max + 1
+    val idfs = new Array[Double](nTerms)
+    metas.foreach(m => idfs(m.termIdx) = m.idf)
     val avgdl = stats.avgdl
     val k0 = k
 
-    def wandOnSegment(segBlocks: Iterator[PostingBlock]): Iterator[ScoredDoc] = {
-      val bySlot = Array.fill(nTerms)(
-        scala.collection.mutable.ArrayBuffer.empty[PostingBlock])
-      segBlocks.foreach(b => bySlot(idxOf(b.termId)) += b)
-      val termBlocks = bySlot.map(_.toArray.sortBy(_.firstDoc))
-      val idfs = Array.tabulate(nTerms)(i => idfOf.getOrElse(i, 0.0))
-      BlockMaxWand.topK(termBlocks, idfs, avgdl, k0).iterator
-    }
+    def wandOnSegment(segBlocks: Iterator[PostingBlock]): Iterator[ScoredDoc] =
+      BlockMaxWand.topK(bySlot(segBlocks, nTerms)(idxOf), idfs, avgdl, k0).iterator
 
     topKBySegment(ids, metas.map(_.df).sum, k)(wandOnSegment)
   }
@@ -283,10 +278,10 @@ final class QueryEngine(spark: SparkSession, val root: String,
     if (metas.length < terms.length) return Array.empty // a term is absent
     val exclMetas = lookupTerms(exclTerms) // absent excluded terms drop out
     val ids = metas.map(_.termId) ++ exclMetas.map(_.termId)
-    val idxOf = metas.map(m => m.termId -> m.termIdx).toMap
-    val exIdxOf = exclMetas.zipWithIndex.map { case (m, i) => m.termId -> i }.toMap
     val nSlots = terms.length
-    val nExcl = exclMetas.length
+    // excluded terms take the slots after the query terms'
+    val slotOf = (metas.map(m => m.termId -> m.termIdx) ++
+      exclMetas.zipWithIndex.map { case (m, i) => m.termId -> (nSlots + i) }).toMap
     val idfs = new Array[Double](nSlots)
     metas.foreach(m => idfs(m.termIdx) = m.idf)
     val avgdl = stats.avgdl
@@ -295,19 +290,8 @@ final class QueryEngine(spark: SparkSession, val root: String,
     // per-segment top-k: match count within one segment is bounded by the
     // segment's doc span, and only <= k rows leave the segment
     def conjOnSegment(segBlocks: Iterator[PostingBlock]): Iterator[ScoredDoc] = {
-      val bySlot = Array.fill(nSlots)(
-        scala.collection.mutable.ArrayBuffer.empty[PostingBlock])
-      val byExcl = Array.fill(nExcl)(
-        scala.collection.mutable.ArrayBuffer.empty[PostingBlock])
-      segBlocks.foreach { b =>
-        idxOf.get(b.termId) match {
-          case Some(i) => bySlot(i) += b
-          case None => byExcl(exIdxOf(b.termId)) += b
-        }
-      }
-      ConjunctiveSearch.segmentMatches(
-        bySlot.map(_.toArray.sortBy(_.firstDoc)), idfs, avgdl,
-        byExcl.map(_.toArray.sortBy(_.firstDoc)))
+      val (slots, excl) = bySlot(segBlocks, nSlots + exclMetas.length)(slotOf).splitAt(nSlots)
+      ConjunctiveSearch.segmentMatches(slots, idfs, avgdl, excl)
         .toArray.sortBy(d => (-d.score, d.docId)).take(k0).iterator
     }
 
@@ -352,15 +336,9 @@ final class QueryEngine(spark: SparkSession, val root: String,
     metas.foreach(m => idfs(m.termIdx) = m.idf)
     val avgdl = stats.avgdl
 
-    def segMatches(segBlocks: Iterator[PosPostingBlock]): Iterator[(Long, Double)] = {
-      val bySlot = Array.fill(nSlots)(Vector.empty[PosPostingBlock])
-      segBlocks.foreach { b =>
-        val s = slotOfTermId(b.termId)
-        bySlot(s) = bySlot(s) :+ b
-      }
-      PhraseSearch.segmentMatches(bySlot.map(_.sortBy(_.firstDoc).toArray),
+    def segMatches(segBlocks: Iterator[PosPostingBlock]): Iterator[(Long, Double)] =
+      PhraseSearch.segmentMatches(bySlot(segBlocks, nSlots)(slotOfTermId),
         slotOffsets, idfs, avgdl)
-    }
 
     def posBlocksScan = readPinned("postings")
       .filter($"termId".isin(ids.toSeq: _*))
@@ -375,7 +353,7 @@ final class QueryEngine(spark: SparkSession, val root: String,
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext =
         ExecutionContext.fromExecutorService(segmentPool)
-      val futs = segmentRuns(all)(_.segId, _.firstDoc).map { run =>
+      val futs = segmentRuns(all).map { run =>
         Future(segMatches(run).toArray)
       }
       Await.result(Future.sequence(futs), Duration.Inf).toArray.flatten
@@ -503,6 +481,22 @@ final class QueryEngine(spark: SparkSession, val root: String,
 
 object QueryEngine {
   final case class TermMeta(termIdx: Int, termId: Long, df: Long, idf: Double)
+
+  private val bySegThenFirstDoc: java.util.Comparator[BlockFields] =
+    java.util.Comparator.comparingLong[BlockFields](_.segId)
+      .thenComparingLong(_.firstDoc)
+
+  /** One segment's blocks bucketed by query slot (`slotOf(termId)`, one of
+    * `nSlots`), each bucket sorted by firstDoc — the per-segment input of
+    * every kernel.
+    */
+  private def bySlot[B <: BlockFields: ClassTag](segBlocks: Iterator[B],
+      nSlots: Int)(slotOf: Long => Int): Array[Array[B]] = {
+    val all = segBlocks.toArray
+    java.util.Arrays.sort(all, bySegThenFirstDoc)
+    val bucketed = all.groupBy(b => slotOf(b.termId))
+    Array.tabulate(nSlots)(s => bucketed.getOrElse(s, Array.empty[B]))
+  }
 
   /** JVM-wide per-size daemon pools for driver-side segment work — engines
     * come and go with snapshots, threads must not.

@@ -208,6 +208,28 @@ class StreamingIndexerSpec extends AnyFunSuite {
       !left.listFiles().exists(_.getName.endsWith(".parquet")))
   }
 
+  test("vacuum removes a crashed write's scratch leftovers, once") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-vac3-").toString
+    new IndexBuilder(spark, root, cfg)
+      .build(spark.range(0L, 300L, 1, 2).map(i => SynthWebText.page(i)))
+    val ice = new graft.index.IceTable(root,
+      spark.sparkContext.hadoopConfiguration)
+    val q = s"${t(0)} ${t(3)}"
+    val before = resultsByUrl(root, q, 10)
+    // the doc-length sidecar a build or append killed inside writePostings
+    // leaves behind
+    val dead = new java.io.File(ice.scratchPath("dl-dead"))
+    assert(dead.mkdirs())
+    Files.write(new java.io.File(dead, "seg-0.bin").toPath, Array[Byte](1, 2, 3))
+    val tables = ice.completedSteps.keys.toSeq
+    val deleted = tables.flatMap(ice.vacuum)
+    assert(deleted == Seq(ice.scratchPath("dl-dead")))
+    assert(!dead.exists())
+    assert(resultsByUrl(root, q, 10) == before, "vacuum changed query results")
+    assert(tables.flatMap(ice.vacuum).isEmpty, "a second vacuum deleted files")
+  }
+
   test("readStream → watermark → dropDuplicates → foreachBatch end-to-end") {
     import spark.implicits._
     val inDir = Files.createTempDirectory("graft-in-").toString
