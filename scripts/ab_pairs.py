@@ -2,8 +2,9 @@
 """Runs the benchmark in alternating pairs on two checkouts and compares them.
 
     python3 scripts/ab_pairs.py --base ../parent --change . --workload serve \
-        --seeds 1-10 --seconds 8 [--out pairs.jsonl]
-    python3 scripts/ab_pairs.py --summarize pairs.jsonl [--base ../parent]
+        --seeds 1-10 --seconds 8 [--out pairs.jsonl] \
+        [--traced 1 --layers query.phrase_p50_ms,query.alloc_kb_per_query]
+    python3 scripts/ab_pairs.py --summarize pairs.jsonl [--base ../parent] [--layers ...]
 
 Each checkout runs `python3 perfbench/run.py` from its own root. First one
 discarded warm-up run per side (it builds the jar and dumps the class-data
@@ -19,6 +20,13 @@ BENCHMARK.json (read, never written): median and quartiles of each side
 change wins, how much worse the change's median is as a share of the
 base's, and whether that stays within the metric's bound. Then every run
 that is not `correct`, has `failed` > 0 or did not report at all.
+
+--traced N adds per-layer context after the pairs: N traced runs per side
+(`--trace 1`, seeds taken in turn from --seeds), which side goes first
+alternating again, and the median per side of each per-layer metric named
+in --layers. Their result lines go to --out with `"traced": true`; the
+end-to-end table is built from untraced runs only, and --summarize prints
+the per-layer medians of any traced lines the file holds.
 """
 import argparse
 import json
@@ -33,11 +41,11 @@ def seeds(spec):
     return list(range(int(lo), int(hi or lo) + 1))
 
 
-def run_once(checkout, workload, seed, seconds):
-    """One untraced perfbench run in `checkout`: its result line, or an error."""
+def run_once(checkout, workload, seed, seconds, trace=False):
+    """One perfbench run in `checkout`: its result line, or an error."""
     res = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-         "--seconds", str(seconds), "--trace", "0"],
+         "--seconds", str(seconds), "--trace", "1" if trace else "0"],
         cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = res.stdout.strip().splitlines()
     try:
@@ -63,8 +71,10 @@ def worse_by(better, base, change):
 def summarize(spec, rows):
     """Per end-to-end metric: each side's quartiles, pair wins and the bound
     verdict; plus every run that failed. `rows` are the records --out holds:
-    {"side": "base"|"change", "seed": n, "result": {...}} or an "error"."""
-    ok = [r for r in rows if "result" in r and r.get("seed") is not None]
+    {"side": "base"|"change", "seed": n, "result": {...}} or an "error",
+    plus `"traced": true` on traced runs, which only the failure list reads."""
+    ok = [r for r in rows
+          if "result" in r and r.get("seed") is not None and not r.get("traced")]
     by_seed = {}
     for r in ok:
         by_seed.setdefault(r["seed"], {})[r["side"]] = r["result"]
@@ -82,13 +92,42 @@ def summarize(spec, rows):
                         "pairs": len(pairs), "worse_by": w, "within": w <= m["bound"]})
     bad = []
     for r in rows:
-        where = f"{r.get('side')} " + ("warm-up" if r.get("seed") is None else f"seed {r['seed']}")
+        where = (f"{r.get('side')} " + ("traced " if r.get("traced") else "") +
+                 ("warm-up" if r.get("seed") is None else f"seed {r['seed']}"))
         if "error" in r:
             bad.append(f"{where}: no report ({r['error']})")
         elif not r["result"].get("correct") or r["result"].get("failed", 0) > 0:
             bad.append(f"{where}: correct={r['result'].get('correct')} "
                        f"failed={r['result'].get('failed')}/{r['result'].get('attempted')}")
     return {"pairs": len(pairs), "metrics": metrics, "bad_runs": bad}
+
+
+def layer_medians(rows, layers=None):
+    """Median per side of each per-layer metric over the traced runs that
+    reported it: {name: {"base": (median, runs), "change": (...)}}. All
+    metrics the traced runs report when `layers` is None."""
+    traced = [r for r in rows if r.get("traced") and "result" in r]
+    if layers is None:
+        layers = sorted({n for r in traced for n in r["result"].get("metrics", {})})
+    out = {}
+    for name in layers:
+        out[name] = {}
+        for side in ("base", "change"):
+            vals = [r["result"]["metrics"][name]["value"] for r in traced
+                    if r["side"] == side and r["result"].get("metrics", {}).get(name, {})
+                    .get("value") is not None]
+            out[name][side] = (statistics.median(vals), len(vals)) if vals else (None, 0)
+    return out
+
+
+def render_layers(workload, medians):
+    def cell(v):
+        return "-" if v[0] is None else f"{v[0]:.4g} (n={v[1]})"
+    lines = [f"### {workload}: per-layer medians of traced runs\n",
+             "| metric | base | change |", "|---|---|---|"]
+    for name, sides in medians.items():
+        lines.append(f"| {name} | {cell(sides['base'])} | {cell(sides['change'])} |")
+    return "\n".join(lines)
 
 
 def render(workload, summ):
@@ -116,7 +155,13 @@ def main():
     ap.add_argument("--seconds", type=float, default=8)
     ap.add_argument("--out", help="JSON lines file the runs are appended to")
     ap.add_argument("--summarize", help="summarize this JSON lines file; run nothing")
+    ap.add_argument("--traced", type=int, default=0,
+                    help="traced runs per side after the pairs")
+    ap.add_argument("--layers", help="comma-separated per-layer metrics to report")
     args = ap.parse_args()
+    layers = args.layers.split(",") if args.layers else None
+    if args.traced and not layers:
+        ap.error("--traced needs --layers")
     with open(os.path.join(args.base, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
 
@@ -124,7 +169,10 @@ def main():
         with open(args.summarize) as fh:
             rows = [json.loads(l) for l in fh if l.strip()]
         for w in sorted({r["workload"] for r in rows}):
-            print(render(w, summarize(spec, [r for r in rows if r["workload"] == w])))
+            wrows = [r for r in rows if r["workload"] == w]
+            print(render(w, summarize(spec, wrows)))
+            if any(r.get("traced") for r in wrows):
+                print(render_layers(w, layer_medians(wrows, layers)))
         return
     if not args.workload:
         ap.error("--workload is required unless --summarize is given")
@@ -132,10 +180,12 @@ def main():
     sides = {"base": os.path.abspath(args.base), "change": os.path.abspath(args.change)}
     rows = []
 
-    def record(side, seed):
+    def record(side, seed, traced=False):
         row = {"workload": args.workload, "side": side, "seed": seed}
+        if traced:
+            row["traced"] = True
         row.update(run_once(sides[side], args.workload, seed if seed is not None else 0,
-                            args.seconds))
+                            args.seconds, traced))
         print(json.dumps(row), flush=True)
         if args.out:
             with open(args.out, "a") as fh:
@@ -144,10 +194,19 @@ def main():
 
     for side in sides:  # warm-up, discarded
         record(side, None)
-    for i, seed in enumerate(seeds(args.seeds)):
-        for side in (("base", "change") if i % 2 == 0 else ("change", "base")):
+    def order(i):
+        return ("base", "change") if i % 2 == 0 else ("change", "base")
+
+    pair_seeds = seeds(args.seeds)
+    for i, seed in enumerate(pair_seeds):
+        for side in order(i):
             record(side, seed)
+    for i in range(args.traced):
+        for side in order(i):
+            record(side, pair_seeds[i % len(pair_seeds)], traced=True)
     print(render(args.workload, summarize(spec, rows)))
+    if args.traced:
+        print(render_layers(args.workload, layer_medians(rows, layers)))
 
 
 if __name__ == "__main__":

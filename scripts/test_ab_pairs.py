@@ -82,5 +82,99 @@ class SummaryTest(unittest.TestCase):
         self.assertIn("Runs not correct or with failures: none", text)
 
 
+def traced_row(side, seed, phrase_ms, alloc_kb, workload="serve"):
+    return {"workload": workload, "side": side, "seed": seed, "traced": True,
+            "result": {"correct": True, "attempted": 100, "failed": 0,
+                       "metrics": {"query.phrase_p50_ms": {"value": phrase_ms, "unit": "ms"},
+                                   "query.alloc_kb_per_query": {"value": alloc_kb,
+                                                                "unit": "KiB"}}}}
+
+
+class TracedTest(unittest.TestCase):
+    def test_traced_lines_stay_out_of_the_end_to_end_table(self):
+        rows = [row("base", 1, 100, 10), row("change", 1, 200, 5),
+                traced_row("base", 1, 120.0, 2600), traced_row("change", 1, 1.2, 300)]
+        s = ab_pairs.summarize(SPEC, rows)
+        self.assertEqual(s["pairs"], 1)
+        self.assertEqual(s["metrics"][0]["base"], (100, 100, 100))
+        self.assertEqual(s["bad_runs"], [])
+
+    def test_failed_traced_runs_are_listed(self):
+        rows = [row("base", 1, 100, 10), row("change", 1, 100, 10),
+                {"workload": "serve", "side": "change", "seed": 1, "traced": True,
+                 "error": "rc=1: boom"}]
+        self.assertEqual(ab_pairs.summarize(SPEC, rows)["bad_runs"],
+                         ["change traced seed 1: no report (rc=1: boom)"])
+
+    def test_layer_medians_per_side(self):
+        rows = [row("base", 1, 100, 10),
+                traced_row("base", 1, 120.0, 2600), traced_row("base", 2, 100.0, 2400),
+                traced_row("base", 3, 140.0, 2500), traced_row("change", 1, 1.0, 300),
+                traced_row("change", 2, 2.0, 280)]
+        m = ab_pairs.layer_medians(rows, ["query.phrase_p50_ms", "query.missing"])
+        self.assertEqual(m["query.phrase_p50_ms"], {"base": (120.0, 3), "change": (1.5, 2)})
+        self.assertEqual(m["query.missing"], {"base": (None, 0), "change": (None, 0)})
+        self.assertEqual(sorted(ab_pairs.layer_medians(rows)),
+                         ["query.alloc_kb_per_query", "query.phrase_p50_ms"])
+
+    def test_traced_runs_alternate_and_are_tagged(self):
+        calls = []
+
+        def fake_run(checkout, workload, seed, seconds, trace=False):
+            calls.append((os.path.basename(checkout), seed, trace))
+            if trace:
+                return {"result": traced_row("x", seed, 1.0, 1.0)["result"]}
+            return {"result": row("x", seed, 100.0, 10.0)["result"]}
+
+        with tempfile.TemporaryDirectory() as d:
+            for side in ("base", "change"):
+                os.makedirs(os.path.join(d, side))
+                with open(os.path.join(d, side, "BENCHMARK.json"), "w") as fh:
+                    json.dump(SPEC, fh)
+            out_file = os.path.join(d, "pairs.jsonl")
+            sys.argv = ["ab_pairs.py", "--base", os.path.join(d, "base"),
+                        "--change", os.path.join(d, "change"), "--workload", "serve",
+                        "--seeds", "1-2", "--out", out_file, "--traced", "2",
+                        "--layers", "query.phrase_p50_ms"]
+            real, ab_pairs.run_once = ab_pairs.run_once, fake_run
+            try:
+                with redirect_stdout(StringIO()) as out:
+                    ab_pairs.main()
+            finally:
+                ab_pairs.run_once = real
+            with open(out_file) as fh:
+                written = [json.loads(l) for l in fh]
+        traced = [(c[0], c[1]) for c in calls if c[2]]
+        self.assertEqual(traced, [("base", 1), ("change", 1), ("change", 2), ("base", 2)])
+        self.assertEqual(sum(1 for r in written if r.get("traced")), 4)
+        # traced lines carry the traced run's (per-layer) metrics
+        self.assertTrue(all(bool(r.get("traced")) ==
+                            ("query.phrase_p50_ms" in r["result"]["metrics"])
+                            for r in written))
+        text = out.getvalue()
+        self.assertIn("### serve: 2 pairs", text)
+        self.assertIn("| query.phrase_p50_ms | 1 (n=2) | 1 (n=2) |", text)
+
+    def test_summarize_prints_layers_of_traced_lines(self):
+        with tempfile.TemporaryDirectory() as d:
+            with open(os.path.join(d, "BENCHMARK.json"), "w") as fh:
+                json.dump(SPEC, fh)
+            lines = os.path.join(d, "pairs.jsonl")
+            with open(lines, "w") as fh:
+                for r in (row("base", 1, 100.0, 10.0), row("change", 1, 100.0, 5.0),
+                          traced_row("base", 1, 120.0, 2600), traced_row("change", 1, 1.25, 294)):
+                    fh.write(json.dumps(r) + "\n")
+            out = StringIO()
+            sys.argv = ["ab_pairs.py", "--summarize", lines, "--base", d,
+                        "--layers", "query.alloc_kb_per_query"]
+            with redirect_stdout(out):
+                ab_pairs.main()
+            text = out.getvalue()
+        self.assertIn("### serve: 1 pairs", text)
+        self.assertIn("| op_p99_ms (ms) | 10 [10, 10] | 5 [5, 5] | 1/1 |", text)
+        self.assertIn("| query.alloc_kb_per_query | 2600 (n=1) | 294 (n=1) |", text)
+        self.assertNotIn("query.phrase_p50_ms", text)
+
+
 if __name__ == "__main__":
     unittest.main()

@@ -38,6 +38,12 @@ object BlockCodec {
 
   def decodeDeltaLongs(bytes: Array[Byte], n: Int): Array[Long] = {
     val out = new Array[Long](n)
+    decodeDeltaLongsInto(bytes, n, out)
+    out
+  }
+
+  /** [[decodeDeltaLongs]] into `out(0 until n)`, allocating nothing. */
+  def decodeDeltaLongsInto(bytes: Array[Byte], n: Int, out: Array[Long]): Unit = {
     var pos = 0
     var prev = 0L
     var i = 0
@@ -55,7 +61,6 @@ object BlockCodec {
       out(i) = prev
       i += 1
     }
-    out
   }
 
   /** Plain varint encode of non-negative ints (tf, dl). */
@@ -117,11 +122,17 @@ object BlockCodec {
   }
 
   /** Decode position lists; `tfs(i)` gives the i-th list's length. */
-  def decodePosLists(bytes: Array[Byte], tfs: Array[Int]): Array[Array[Int]] = {
-    val out = new Array[Array[Int]](tfs.length)
+  def decodePosLists(bytes: Array[Byte], tfs: Array[Int]): Array[Array[Int]] =
+    decodePosLists(bytes, tfs, tfs.length)
+
+  /** The first `n` position lists, `tfs(i)` the i-th list's length — for a
+    * `tfs` buffer longer than its block.
+    */
+  def decodePosLists(bytes: Array[Byte], tfs: Array[Int], n: Int): Array[Array[Int]] = {
+    val out = new Array[Array[Int]](n)
     var pos = 0
     var i = 0
-    while (i < tfs.length) {
+    while (i < n) {
       val xs = new Array[Int](tfs(i))
       var prev = 0
       var j = 0
@@ -147,6 +158,12 @@ object BlockCodec {
 
   def decodeInts(bytes: Array[Byte], n: Int): Array[Int] = {
     val out = new Array[Int](n)
+    decodeIntsInto(bytes, n, out)
+    out
+  }
+
+  /** [[decodeInts]] into `out(0 until n)`, allocating nothing. */
+  def decodeIntsInto(bytes: Array[Byte], n: Int, out: Array[Int]): Unit = {
     var pos = 0
     var i = 0
     while (i < n) {
@@ -162,6 +179,5 @@ object BlockCodec {
       out(i) = v.toInt
       i += 1
     }
-    out
   }
 }

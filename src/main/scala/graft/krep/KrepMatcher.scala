@@ -4,6 +4,7 @@ import java.util.regex.Pattern
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable.ArrayBuffer
@@ -59,8 +60,12 @@ final case class KrepParams(
   *
   * All literal matching is byte-wise over the UTF8String's bytes — identical
   * to the reference's memcmp semantics, NUL-safe, and free of any
-  * UTF-8-decode cost. Regex matching uses Java regex over the decoded string
-  * (documented semantic pin, SURVEY.md §7.4).
+  * UTF-8-decode cost. The literal and Aho-Corasick kernels run over an
+  * offset view `bytes[from, until)` where it lies: a `UTF8String` backed by
+  * an on-heap `byte[]` is never copied, match offsets are relative to the
+  * view, and the view's edges are text edges for whole-word checks. Regex
+  * matching uses Java regex over the decoded string (documented semantic
+  * pin, SURVEY.md §7.4).
   */
 final class KrepMatcher(val params: KrepParams) extends Serializable {
 
@@ -122,12 +127,21 @@ final class KrepMatcher(val params: KrepParams) extends Serializable {
 
   // ---- match enumeration --------------------------------------------------
 
-  @inline private def wordOk(bytes: Array[Byte], start: Int, end: Int): Boolean =
+  /** Whole-word check of the match `[start, end)` of the view `[from,
+    * until)`: the view's edges are text edges, so bytes outside it never
+    * veto a match.
+    */
+  @inline private def wordOk(bytes: Array[Byte], from: Int, until: Int,
+      start: Int, end: Int): Boolean =
     !wholeWord ||
-      ((start == 0 || !AsciiFold.isWordByte(bytes(start - 1))) &&
-        (end >= bytes.length || !AsciiFold.isWordByte(bytes(end))))
+      ((start == from || !AsciiFold.isWordByte(bytes(start - 1))) &&
+        (end >= until || !AsciiFold.isWordByte(bytes(end))))
 
-  /** Visit matches as (start, end, patternIdx); stop when onMatch is false. */
+  /** Visit matches as (start, end, patternIdx); stop when onMatch is false.
+    * A string backed by an on-heap `byte[]` (a row field, a dict term) is
+    * scanned where it lies through the range entry below; only an off-heap
+    * string is copied out first.
+    */
   def foreachMatch(s: UTF8String)(onMatch: (Int, Int, Int) => Boolean): Unit = {
     if (regex) {
       val str = s.toString
@@ -208,42 +222,56 @@ final class KrepMatcher(val params: KrepParams) extends Serializable {
           if (m2.find()) onMatch(toByteOff(m2.start), toByteOff(m2.end), 0)
         }
       }
-    } else {
-      val bytes = s.getBytes
-      if (singleLiteral != null) scanSingle(bytes, onMatch)
-      else {
-        if (overlapping) { ac.scan(bytes, 0, bytes.length) { (st, en, p) =>
-          !wordOk(bytes, st, en) || onMatch(st, en, p)
-        }; () }
-        else {
-          // non-overlapping multi-pattern: leftmost-first, resume at match end
-          var lastEnd = 0
-          ac.scan(bytes, 0, bytes.length) { (st, en, p) =>
-            if (st >= lastEnd && wordOk(bytes, st, en)) {
-              lastEnd = en
-              onMatch(st, en, p)
-            } else true
-          }
-          ()
-        }
-      }
+    } else s.getBaseObject match {
+      case a: Array[Byte] =>
+        val from = (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt
+        foreachMatch(a, from, from + s.numBytes)(onMatch)
+      case _ =>
+        val bytes = s.getBytes
+        foreachMatch(bytes, 0, bytes.length)(onMatch)
     }
   }
 
-  private def scanSingle(bytes: Array[Byte],
+  /** [[foreachMatch]] over the view `bytes[from, until)`, with no copy for
+    * the literal and Aho-Corasick kernels; offsets are relative to `from`.
+    * Regex decodes the view, as it does any string.
+    */
+  def foreachMatch(bytes: Array[Byte], from: Int, until: Int)(
+      onMatch: (Int, Int, Int) => Boolean): Unit =
+    if (regex) foreachMatch(UTF8String.fromBytes(bytes, from, until - from))(onMatch)
+    else if (singleLiteral != null) scanSingle(bytes, from, until, onMatch)
+    else if (overlapping) {
+      ac.scan(bytes, from, until) { (st, en, p) =>
+        !wordOk(bytes, from, until, st, en) || onMatch(st - from, en - from, p)
+      }
+      ()
+    } else {
+      // non-overlapping multi-pattern: leftmost-first, resume at match end
+      var lastEnd = from
+      ac.scan(bytes, from, until) { (st, en, p) =>
+        if (st >= lastEnd && wordOk(bytes, from, until, st, en)) {
+          lastEnd = en
+          onMatch(st - from, en - from, p)
+        } else true
+      }
+      ()
+    }
+
+  private def scanSingle(bytes: Array[Byte], from: Int, until: Int,
       onMatch: (Int, Int, Int) => Boolean): Unit = {
     val pat = singleLiteral
     val plen = pat.length
-    if (plen == 0 || plen > bytes.length) return
+    if (plen == 0 || plen > until - from) return
     val first = pat(0)
-    var i = 0
-    val limit = bytes.length - plen
+    var i = from
+    val limit = until - plen
     var go = true
     while (go && i <= limit) {
       // fold text byte on the fly for case-insensitive mode
       val b = if (caseSensitive) bytes(i) else AsciiFold.fold(bytes(i))
       if (b == first && regionMatches(bytes, i, pat)) {
-        if (wordOk(bytes, i, i + plen)) go = onMatch(i, i + plen, 0)
+        if (wordOk(bytes, from, until, i, i + plen))
+          go = onMatch(i - from, i - from + plen, 0)
         i += (if (overlapping) 1 else plen)
       } else i += 1
     }
@@ -279,6 +307,14 @@ final class KrepMatcher(val params: KrepParams) extends Serializable {
     if (maxCount <= 0) return false // consistent with count/positions at -m 0
     var hit = false
     foreachMatch(s) { (_, _, _) => hit = true; false }
+    hit
+  }
+
+  /** [[contains]] over the view `bytes[from, until)`. */
+  def contains(bytes: Array[Byte], from: Int, until: Int): Boolean = {
+    if (maxCount <= 0) return false
+    var hit = false
+    foreachMatch(bytes, from, until) { (_, _, _) => hit = true; false }
     hit
   }
 

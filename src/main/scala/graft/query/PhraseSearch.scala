@@ -20,7 +20,9 @@ import graft.index.{BlockCodec, PosPostingBlock}
 object PhraseSearch {
 
   /** [[PostingCursor]] plus lazy position decoding: a block's `poss` decode
-    * on the first [[positions]] call inside it.
+    * on the first [[positions]] call inside it. The decode reads the tfs
+    * buffer while it holds this block's tfs, and a reload moves `block`, so
+    * decoded lists never outlive the block they belong to.
     */
   private final class PosCursor(blocks: Array[PosPostingBlock])
       extends PostingCursor(blocks) {
@@ -30,7 +32,7 @@ object PhraseSearch {
     def positions: Array[Int] = {
       if (posBlock ne block) {
         posBlock = block
-        posLists = BlockCodec.decodePosLists(posBlock.poss, blockTfs)
+        posLists = BlockCodec.decodePosLists(posBlock.poss, blockTfs, blockLength)
       }
       posLists(offset)
     }

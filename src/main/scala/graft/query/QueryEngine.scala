@@ -47,8 +47,13 @@ final class QueryEngine(spark: SparkSession, val root: String,
     case Some(id) => ice.stepsAt(id)
     case None => ice.completedSteps
   }
+  /** Each pinned table's relation, resolved (file listing and schema
+    * inference) on its first read and reused: the snapshot is fixed, so
+    * the relation never changes under the engine.
+    */
+  private val pinned = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
   private def readPinned(name: String): DataFrame =
-    ice.readSteps(spark, snapshot, name)
+    pinned.computeIfAbsent(name, n => ice.readSteps(spark, snapshot, n))
 
   val stats: IndexStats = {
     val r = readPinned("stats").head()
@@ -314,6 +319,17 @@ final class QueryEngine(spark: SparkSession, val root: String,
     *     term's posting count. This catches case/separator mismatches that
     *     token adjacency admits (e.g. sentence-capitalized first words).
     *  3. BM25 order (score DESC, docId ASC), top-k.
+    *
+    * Strategies and the relations they build:
+    *  - distributed (neither blocks nor candidates fit the driver): a
+    *    postings scan, and the corpus relation with the literal filter for
+    *    the recheck join;
+    *  - driver-cacheable index and corpus: the driver-resident blocks and
+    *    corpus text, loaded once per engine; a warm call builds no
+    *    relation, reads no file and launches no Spark job;
+    *  - otherwise: the driver-resident blocks or one postings scan, then the
+    *    corpus relation with the literal filter for the batched point
+    *    lookups.
     */
   def searchPhrase(phrase: String, k: Int): Array[ScoredDoc] = {
     import graft.krep.{KrepParams, functions => K}
@@ -359,8 +375,10 @@ final class QueryEngine(spark: SparkSession, val root: String,
       Await.result(Future.sequence(futs), Duration.Inf).toArray.flatten
     }
 
-    val corpus = readPinned("corpus").select($"docId", $"text")
-    val literal = K.krep_contains($"text", KrepParams(Seq(phrase)))
+    // the corpus relation and the literal recheck over it: built only by
+    // the distributed join and the batched point lookups below
+    def corpus = readPinned("corpus").select($"docId", $"text")
+    def literal = K.krep_contains($"text", KrepParams(Seq(phrase)))
 
     // distributed strategy (the 10^12-doc route): candidates NEVER collect
     // to the driver — the literal recheck is a distributed equi-join on
@@ -472,8 +490,7 @@ final class QueryEngine(spark: SparkSession, val root: String,
     val topDf = spark.createDataFrame(
       top.toSeq.zipWithIndex.map { case (s, r) => (r + 1, s.docId, s.score) })
       .toDF("rank", "docId", "score")
-    val docs = readPinned("docs")
-    docs.join(broadcast(topDf), "docId")
+    docsDf.join(broadcast(topDf), "docId")
       .select($"rank", $"docId", $"url", $"score")
       .orderBy($"rank")
   }

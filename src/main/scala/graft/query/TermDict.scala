@@ -5,7 +5,6 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, sum}
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.index.{IceTable, StepInfo}
 import graft.krep.{KrepMatcher, KrepParams, functions => K}
@@ -31,7 +30,8 @@ sealed trait TermDict {
   /** Terms matching `params` (krep semantics over each term), cut at the
     * `maxExpand` highest df, ties by term — the reference caps patterns at
     * 1024 (krep.c:3571) and the hottest terms dominate a disjunctive score.
-    * Term-sorted.
+    * Term-sorted. The resident dict runs the matcher only over the terms
+    * that start with a regex's [[TermDict.anchoredPrefix]], when it has one.
     */
   def expand(params: KrepParams, maxExpand: Int): Array[String]
 
@@ -77,18 +77,42 @@ object TermDict {
   /** The last resident dict loaded per index root, with its dict step. */
   private val loaded = new ConcurrentHashMap[String, (StepInfo, Resident)]
 
+  /** The literal prefix every term a regex matches starts with, or None
+    * when the regex does not qualify. It qualifies when it is one
+    * case-sensitive, non-whole-word pattern that starts with `^` and holds
+    * no `|` and no `(?`. Terms are tokenizer output with no `\n`, so its
+    * MULTILINE `^` can match only at offset 0, and the ASCII letters and
+    * digits right after it must follow there literally. The prefix is that
+    * run, less its last character when a quantifier (`*`, `?`, `{`, `+`)
+    * follows it. An empty prefix narrows nothing.
+    */
+  private[query] def anchoredPrefix(params: KrepParams): Option[String] = {
+    import params._
+    val p = patterns.head
+    if (!regex || patterns.size != 1 || !caseSensitive || wholeWord ||
+        !p.startsWith("^") || p.contains("|") || p.contains("(?")) None
+    else {
+      val run = p.drop(1).takeWhile(c => c < 0x80 && c.isLetterOrDigit)
+      val cut = p.lift(1 + run.length).exists("*?{+".contains(_))
+      Some(if (cut) run.dropRight(1) else run).filter(_.nonEmpty)
+    }
+  }
+
   /** Driver-resident dict: the UTF-8 bytes of every term in one array in
     * term order, term `i` at `bytes[offs(i), offs(i + 1))`, with termIds and
     * summed dfs alongside. Lookup is a binary search; expansion runs the
-    * matcher over the stored bytes with no per-term re-encode.
+    * matcher over the stored bytes, an offset view per term, with no copy
+    * and no per-term `UTF8String`. A regex with an [[anchoredPrefix]] scans
+    * only the term range that starts with it, which two binary searches
+    * find; every other expansion scans the whole dict.
     */
   final class Resident private (bytes: Array[Byte], offs: Array[Int],
       ids: Array[Long], dfs: Array[Long]) extends TermDict {
 
     def size: Int = ids.length
 
-    private def term(i: Int): UTF8String =
-      UTF8String.fromBytes(bytes, offs(i), offs(i + 1) - offs(i))
+    private def term(i: Int): String =
+      new String(bytes, offs(i), offs(i + 1) - offs(i), UTF_8)
 
     private def find(t: Array[Byte]): Int = {
       var lo = 0
@@ -110,10 +134,42 @@ object TermDict {
         if (i < 0) None else Some((ids(i), dfs(i)))
       }
 
+    /** First index whose term's leading `p.length` bytes compare above `p`
+      * (`strict`) or not below it. Truncating to `p.length` bytes keeps term
+      * order, so both are binary searches.
+      */
+    private def bound(p: Array[Byte], strict: Boolean): Int = {
+      var lo = 0
+      var hi = size
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        val c = java.util.Arrays.compareUnsigned(bytes, offs(mid),
+          math.min(offs(mid) + p.length, offs(mid + 1)), p, 0, p.length)
+        if (c < 0 || (strict && c == 0)) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+
     /** Indexes of the terms `params` matches, ascending. */
     private def matching(params: KrepParams): Array[Int] = {
       val m = new KrepMatcher(params)
-      Array.range(0, size).filter(i => m.contains(term(i)))
+      val (from, until) = anchoredPrefix(params) match {
+        case Some(p) =>
+          val b = p.getBytes(UTF_8)
+          val range = (bound(b, strict = false), bound(b, strict = true))
+          // compile the regex even when no term is in range, so a malformed
+          // one fails here as it does on a full scan
+          if (range._1 == range._2) m.contains(Array.emptyByteArray, 0, 0)
+          range
+        case None => (0, size)
+      }
+      val hits = Array.newBuilder[Int]
+      var i = from
+      while (i < until) {
+        if (m.contains(bytes, offs(i), offs(i + 1))) hits += i
+        i += 1
+      }
+      hits.result()
     }
 
     /** The `limit` highest-df terms among `idx` with df > `minDf`. `idx` is
@@ -125,7 +181,7 @@ object TermDict {
       val cut =
         if (above.length <= limit) above
         else above.sortBy(i => -dfs(i)).take(limit)
-      cut.sorted.map(i => term(i).toString)
+      cut.sorted.map(term)
     }
 
     def expand(params: KrepParams, maxExpand: Int): Array[String] =

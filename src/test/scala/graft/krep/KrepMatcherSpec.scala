@@ -335,4 +335,58 @@ class KrepMatcherSpec extends AnyFunSuite {
     assert(m.count(s) >= 1)
     assert(m.contains(s))
   }
+
+  test("count, contains and positions over an offset view == over a copied array") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val pieces = Seq("ab", "Ab", "a", "b_", "x9", " ", ".", "ba", "aB")
+    val patGen = Gen.oneOf("ab", "a", "Ab", "b a", "a.", "ba")
+    val wordByte = Gen.oneOf("a", "B", "_", "7")
+    val caseGen = for {
+      pats <- Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, patGen)).map(_.distinct)
+      mid <- Gen.choose(0, 8).flatMap(n => Gen.listOfN(n, Gen.oneOf(pieces)))
+      // the view's first and last bytes start and end a match
+      atStart <- Gen.oneOf(true, false)
+      atEnd <- Gen.oneOf(true, false)
+      left <- Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, wordByte))
+      right <- Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, wordByte))
+      cs <- Gen.oneOf(true, false)
+      ww <- Gen.oneOf(true, false)
+      ov <- Gen.oneOf(true, false)
+      algo <- Gen.oneOf("auto", "ac")
+    } yield {
+      val text = (if (atStart) pats.head else "") + mid.mkString +
+        (if (atEnd) pats.last else "")
+      (pats, text, left.mkString, right.mkString, cs, ww, ov, algo)
+    }
+    val cases = Gen.listOfN(400, caseGen).pureApply(Gen.Parameters.default, Seed(7L))
+    def spans(m: KrepMatcher, s: UTF8String): Seq[(Int, Int, Int)] = {
+      val a = m.positions(s)
+      (0 until a.numElements()).map { i =>
+        val r = a.getStruct(i, 3)
+        (r.getInt(0), r.getInt(1), r.getInt(2))
+      }
+    }
+    var kernels = Set.empty[String]
+    var edgeHits = 0
+    cases.foreach { case (pats, text, left, right, cs, ww, ov, algo) =>
+      val m = new KrepMatcher(KrepParams(pats, caseSensitive = cs, wholeWord = ww,
+        overlapping = ov, algo = algo))
+      kernels += m.kernelName
+      val bytes = text.getBytes(UTF_8)
+      val buf = (left + text + right).getBytes(UTF_8)
+      val view = UTF8String.fromBytes(buf, left.length, bytes.length)
+      val copy = UTF8String.fromBytes(bytes.clone())
+      val what = s"pats=$pats text='$text' in '$left|$right' cs=$cs ww=$ww ov=$ov algo=$algo"
+      assert(m.count(view) == m.count(copy), what)
+      assert(m.contains(view) == m.contains(copy), what)
+      assert(m.contains(buf, left.length, left.length + bytes.length) == m.contains(copy), what)
+      val want = spans(m, copy)
+      assert(spans(m, view) == want, what)
+      if (want.exists(_._1 == 0) && want.exists(_._2 == bytes.length)) edgeHits += 1
+    }
+    assert(kernels == Set("literal-scan", "aho-corasick"))
+    assert(edgeHits > 20, s"only $edgeHits cases matched at both view edges")
+  }
 }

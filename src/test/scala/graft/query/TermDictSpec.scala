@@ -136,6 +136,64 @@ class TermDictSpec extends AnyFunSuite {
     }
   }
 
+  test("anchoredPrefix: the literal run after ^, less a quantified last char") {
+    def pre(r: String, cs: Boolean = true, ww: Boolean = false): Option[String] =
+      TermDict.anchoredPrefix(KrepParams(Seq(r), caseSensitive = cs, wholeWord = ww,
+        regex = true, overlapping = false))
+    assert(pre("^abc[a-z]*1$") == Some("abc"))
+    assert(pre("^abc") == Some("abc"))
+    Seq("^ab*", "^ab?c", "^ab{0,1}", "^ab+", "^ab+?").foreach(r => assert(pre(r) == Some("a"), r))
+    Seq("^a*", "^ab|cd", "^ab(?i)c", "^\\d", "^$", "^", "abc", "a^b")
+      .foreach(r => assert(pre(r).isEmpty, r))
+    assert(pre("^abc", cs = false).isEmpty)
+    assert(pre("^abc", ww = true).isEmpty)
+    assert(TermDict.anchoredPrefix(KrepParams(Seq("^ab", "^cd"), regex = true)).isEmpty)
+    assert(TermDict.anchoredPrefix(KrepParams(Seq("^ab"))).isEmpty)
+  }
+
+  /** The resident expansion before prefix ranges: the matcher over every
+    * term in term order, then the df cut (a stable sort keeps term order
+    * among equal dfs).
+    */
+  private def fullScanExpand(params: KrepParams, maxExpand: Int): Seq[String] = {
+    val m = new KrepMatcher(params)
+    val hit = terms.filter(t => m.contains(UTF8String.fromString(t)))
+    val cut =
+      if (hit.length <= maxExpand) hit
+      else hit.sortBy(t => -oracle(t)._2).take(maxExpand)
+    cut.sorted
+  }
+
+  test("expand of anchored regexes == a full scan, prefix range or not") {
+    val long = terms.filter(_.length >= 3)
+    val anchored: Gen[String] = Gen.oneOf(long).flatMap { t =>
+      val (a, b, c) = (t(0), t(1), t(2))
+      Gen.oneOf(s"^$a$b*", s"^$a$b?$c", s"^$a$b{0,1}", s"^$a$b+", s"^$a$b|$c$a",
+        s"^$a$b(?i)$c", "^\\d", "^$", "^zzqqxnotaprefix", "^.*", s"^$t",
+        s"^${t.take(3)}[a-z]*[0-9]$$", s"^${terms.head}", s"^${terms.last}",
+        s"^${t.take(2)}")
+    }
+    val cases = sample(for {
+      r <- anchored
+      cs <- Gen.oneOf(true, false)
+      ww <- Gen.oneOf(true, false)
+      cap <- capGen
+    } yield (r, cs, ww, cap), 120, 5L)
+    var ranged = 0
+    cases.foreach { case (r, cs, ww, cap) =>
+      val params = KrepParams(Seq(r), caseSensitive = cs, wholeWord = ww,
+        regex = true, overlapping = false)
+      val want = fullScanExpand(params, cap)
+      assert(resident.expand(params, cap).toSeq == want, s"/$r/ cs=$cs ww=$ww cap=$cap")
+      if (TermDict.anchoredPrefix(params).isDefined && want.nonEmpty) ranged += 1
+    }
+    assert(ranged > 10, s"only $ranged cases took a non-empty prefix range")
+    // a malformed regex fails as on a full scan, although no term is in
+    // its prefix range
+    intercept[java.util.regex.PatternSyntaxException](
+      resident.expand(KrepParams(Seq("^zzqqx["), regex = true), 10))
+  }
+
   test("hotTerms: same top-k in both, including a hot set beyond HotTermCap") {
     def oracleHot(minDf: Long): Seq[String] =
       oracle.toSeq.collect { case (t, (_, df)) if df > minDf => (t, df) }
