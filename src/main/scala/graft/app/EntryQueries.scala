@@ -527,8 +527,8 @@ object EntryQueries {
         .orderBy($"doc_id")
     }),
     // canonical simhash: the PolyHash scheme, fully value-oracled in DuckDB
-    // (the xxhash64 variant stays a library function — TextOps.simhash64 —
-    // gated in sbt, since no cross-engine oracle can reproduce xxhash64)
+    // (no cross-engine oracle can reproduce an xxhash64 SimHash, so that
+    // variant lives only as an sbt-side test oracle)
     "simhash" -> ((s, dir) => {
       import s.implicits._
       // fused kernel: text → simhash in one codegen'd pass (no 31x HOF

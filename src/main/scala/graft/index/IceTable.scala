@@ -75,15 +75,18 @@ final class IceTable(val root: String, conf: Configuration) {
     }
   }
 
-  /** Max id present in the immutable snapshot log. */
-  private def logMaxId: Option[Long] = {
+  /** Ids in the immutable snapshot log, ascending. */
+  private def logIds: Seq[Long] = {
     val dir = new Path(root, "snapshots")
-    if (!fs.exists(dir)) None
+    if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq.map(_.getPath.getName)
       .collect { case s if s.startsWith("snapshot-") && s.endsWith(".json") =>
         s.stripPrefix("snapshot-").stripSuffix(".json").toLong
-      }.maxOption
+      }.sorted
   }
+
+  /** Max id present in the immutable snapshot log. */
+  private def logMaxId: Option[Long] = logIds.lastOption
 
   /** Current snapshot = max(LATEST pointer, snapshot-log max). Resolution is
     * robust on the READER side instead of trusting the pointer: the pointer
@@ -430,11 +433,7 @@ final class IceTable(val root: String, conf: Configuration) {
   def expireSnapshots(keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, "must keep at least the current snapshot")
     val dir = new Path(root, "snapshots")
-    if (!fs.exists(dir)) return Nil
-    val ids = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("snapshot-") && s.endsWith(".json") =>
-        s.stripPrefix("snapshot-").stripSuffix(".json").toLong
-      }.sorted
+    val ids = logIds
     // never delete the id the LATEST pointer references (or anything newer):
     // if the pointer lags or briefly regressed, expiring its target would
     // break completedSteps for every reader that resolves the pointer
@@ -444,7 +443,9 @@ final class IceTable(val root: String, conf: Configuration) {
     // manifest GC, conservative: only side files an EXPIRED snapshot
     // referenced and no SURVIVOR references may go — a manifest referenced
     // by nothing (an in-flight commit between manifest write and snapshot
-    // CAS) is never touched
+    // CAS) is never touched. Survivors are listed AFTER the deletes, so a
+    // snapshot committed while they ran keeps the manifests it shares with
+    // a dropped one
     def refsOf(id: Long): Set[String] = {
       val p = new Path(dir, s"snapshot-$id.json")
       if (!fs.exists(p)) Set.empty
@@ -458,7 +459,7 @@ final class IceTable(val root: String, conf: Configuration) {
     }
     val droppedRefs = drop.flatMap(refsOf).toSet
     drop.foreach(id => fs.delete(new Path(dir, s"snapshot-$id.json"), false))
-    val survivorRefs = ids.filterNot(drop.contains).flatMap(refsOf).toSet
+    val survivorRefs = logIds.flatMap(refsOf).toSet
     (droppedRefs -- survivorRefs).foreach { h =>
       fs.delete(manifestPath(h), false)
       IceTable.manifestCache.remove((root, h))

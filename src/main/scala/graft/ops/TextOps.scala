@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.krep.{functions => K}
 
 /** Training-data-pipeline text operators, all pure Column builders over the
-  * codegen'd krep tokenizer + Spark higher-order functions — no UDFs, no
-  * driver-side loops, so every one of these runs inside whole-stage codegen
-  * and scales linearly with the corpus.
+  * codegen'd krep tokenizer, Spark higher-order functions and the fused
+  * MinHash kernels of `kernels.scala` — no UDFs, no driver-side loops, so
+  * every one of these scales linearly with the corpus.
   */
 object TextOps {
 
@@ -74,37 +74,10 @@ object TextOps {
     when(union > 0L, inter * 10000L / union).otherwise(lit(0L)).cast("long")
   }
 
-  /** SimHash64 over term frequencies: bit j set iff Σ tf·(±1 from hash bit j)
-    * is positive.
-    */
-  /** (termHash, tf) pairs — materialize as a column before
-    * [[simhash64FromHashedTf]] (see [[shingleHashesPoly]] for why).
-    */
-  def hashedTermFreqs(text: Column): Column =
-    transform(K.krep_term_freqs(text), e =>
-      struct(xxhash64(e.getField("term")).as("h"),
-        e.getField("tf").cast("long").as("tf")))
-
-  def simhash64FromHashedTf(htf: Column): Column = {
-    val bits: Seq[Column] = (0 until 64).map { j =>
-      when(
-        aggregate(htf, lit(0L), (acc, e) =>
-          acc + e.getField("tf") *
-            when(shiftright(e.getField("h"), j)
-              .bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)) > 0L,
-        1L).otherwise(0L)
-    }
-    bits.foldLeft(lit(0L))((acc, b) => shiftleft(acc, 1).bitwiseOR(b))
-  }
-
-  def simhash64(text: Column): Column =
-    simhash64FromHashedTf(hashedTermFreqs(text))
-
-  // --- cross-engine-exact variants (PolyHash mod 2^31-1) ---------------------
-  // MinHash and SimHash whose every intermediate value is exact integer
-  // arithmetic reproducible in ANSI SQL — so the DuckDB oracle can verify
-  // full values, not just row counts. The xxhash64 SimHash above is the
-  // wider-hash library variant.
+  // --- cross-engine-exact MinHash / LSH (PolyHash mod 2^31-1) ---------------
+  // Every intermediate value is exact integer arithmetic reproducible in
+  // ANSI SQL, so the DuckDB oracle can verify full values, not just row
+  // counts.
 
   val HashP = 2147483647L // 2^31 - 1
 
@@ -115,36 +88,13 @@ object TextOps {
     (a, b)
   }
 
-  /** One PolyHash per shingle. Materialize this as its own column before
-    * the k min-scans of [[minhashPolyFromHashes]]: higher-order lambdas get
-    * no common-subexpression elimination, so feeding an expression (rather
-    * than a bound column) recomputes the whole shingle pipeline k times per
-    * row.
-    */
-  def shingleHashesPoly(text: Column, shingleN: Int = 3): Column =
-    transform(shingles(text, shingleN), s => kernels.poly_hash(s))
-
-  /** MinHash signature: slot i = min over shingles of (a_i·h + b_i) mod P;
-    * empty shingle set → P (the oracle's coalesce default).
-    */
-  def minhashPolyFromHashes(hs: Column, k: Int): Column =
-    array(minhashCoeffs(k).map { case (a, b) =>
-      aggregate(hs, lit(HashP),
-        (m, h) => least(m, (h * lit(a) + lit(b)) % lit(HashP)))
-    }: _*)
-
-  /** LSH band hash: polynomial fold over the band's signature slots. */
-  def bandHashPoly(sig: Column, band: Int, rows: Int): Column =
-    aggregate(slice(sig, band * rows + 1, rows), lit(0L),
-      (acc, v) => (acc * 131L + v) % lit(HashP))
-
-  // --- fused codegen'd twins of the PolyHash MinHash pipeline ---------------
-  // Value-identical to shingleHashesPoly → minhashPolyFromHashes →
-  // bandHashPoly (OpsSpec pins the equality), but one unboxed kernel call per
-  // row instead of interpreted CodegenFallback lambdas — and with no
-  // intermediate column there is nothing for CollapseProject to re-inline,
-  // so the persist() barriers the HOF chain required become plain reuse
-  // persists.
+  // --- fused codegen'd PolyHash MinHash pipeline ----------------------------
+  // Value-identical to the higher-order-function chain shingles → poly_hash
+  // → k × aggregate(least) → band fold (kept in src/test as `HofOracles`;
+  // OpsSpec pins the equality), but one unboxed kernel call per row instead
+  // of interpreted CodegenFallback lambdas — and with no intermediate column
+  // there is nothing for CollapseProject to re-inline, so the persist()
+  // barriers the HOF chain required become plain reuse persists.
 
   /** text → k-slot MinHash signature in one pass ([[MinHashShingleSig]]). */
   def minhashShingleSigPoly(text: Column, k: Int, shingleN: Int = 3): Column =
@@ -157,25 +107,4 @@ object TextOps {
   /** Codegen'd twin of [[shingles]] ([[ShingleStrings]]). */
   def shinglesKernel(text: Column, n: Int): Column =
     kernels.shingle_strings(text, n)
-
-  /** (polyhash(term), tf) pairs — materialize before [[simhash31FromHashedTf]]. */
-  def hashedTermFreqsPoly(text: Column): Column =
-    transform(K.krep_term_freqs(text), e =>
-      struct(kernels.poly_hash(e.getField("term")).as("h"),
-        e.getField("tf").cast("long").as("tf")))
-
-  /** 31-bit SimHash (the PolyHash value space): bit j set iff the tf-weighted
-    * ±1 vote on hash bit j is positive; assembled MSB-first.
-    */
-  def simhash31FromHashedTf(htf: Column): Column = {
-    val bits: Seq[Column] = (0 until 31).map { j =>
-      when(
-        aggregate(htf, lit(0L), (acc, e) =>
-          acc + e.getField("tf") *
-            when(shiftright(e.getField("h"), j)
-              .bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)) > 0L,
-        1L).otherwise(0L)
-    }
-    bits.foldLeft(lit(0L))((acc, b) => shiftleft(acc, 1).bitwiseOR(b))
-  }
 }

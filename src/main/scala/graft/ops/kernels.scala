@@ -444,8 +444,9 @@ object ShingleStrings {
   }
 }
 
-/** text → 31-bit PolyHash SimHash in one pass (codegen'd twin of
-  * `hashedTermFreqsPoly → 31 × aggregate(vote)`): per distinct term, tf
+/** text → 31-bit PolyHash SimHash in one pass (codegen'd twin of the
+  * higher-order-function chain `krep_term_freqs → poly_hash → 31 ×
+  * aggregate(vote)`, an OpsSpec oracle): per distinct term, tf
   * ±1-votes on each hash bit; bit j set iff the vote is positive; bits
   * assembled MSB-first — identical values (long adds are exact and
   * commutative over the per-term votes). Null-intolerant: NULL text gives

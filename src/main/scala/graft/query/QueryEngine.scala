@@ -209,10 +209,12 @@ final class QueryEngine(spark: SparkSession, val root: String,
     searchTerms(canonicalTerms(query), k)
 
   /** Multi-pattern query mode (SURVEY.md §3.4): each literal pattern expands
-    * to every dictionary term CONTAINING it (krep substring semantics, one
-    * multi-pattern scan of the dict via the same Aho-Corasick matcher the
-    * text filters use), and the union of expansions runs as a disjunctive
-    * block-max-WAND BM25 — the index-side analog of `krep -e p1 -e p2`.
+    * to every dictionary term CONTAINING it (krep substring semantics: the
+    * same Aho-Corasick matcher the text filters use, run over the terms the
+    * dict's trigram index admits when every pattern is at least 3 bytes,
+    * else over the whole dict), and the union of expansions runs as a
+    * disjunctive block-max-WAND BM25 — the index-side analog of
+    * `krep -e p1 -e p2`.
     */
   def searchMultiPattern(patterns: Seq[String], k: Int,
       caseSensitive: Boolean = true, maxExpand: Int = 1024): Array[ScoredDoc] =

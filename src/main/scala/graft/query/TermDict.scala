@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, sum}
 
 import graft.index.{IceTable, StepInfo}
-import graft.krep.{KrepMatcher, KrepParams, functions => K}
+import graft.krep.{AsciiFold, KrepMatcher, KrepParams, functions => K}
 
 /** The term dictionary of one pinned snapshot: term → (termId, df). The
   * dict step is a base file set plus per-append DELTA files (a partial df
@@ -31,7 +31,9 @@ sealed trait TermDict {
     * `maxExpand` highest df, ties by term — the reference caps patterns at
     * 1024 (krep.c:3571) and the hottest terms dominate a disjunctive score.
     * Term-sorted. The resident dict runs the matcher only over the terms
-    * that start with a regex's [[TermDict.anchoredPrefix]], when it has one.
+    * its trigram index admits for a literal query of patterns of 3 bytes or
+    * more, or over the terms that start with a regex's
+    * [[TermDict.anchoredPrefix]], when it has one.
     */
   def expand(params: KrepParams, maxExpand: Int): Array[String]
 
@@ -100,16 +102,27 @@ object TermDict {
 
   /** Driver-resident dict: the UTF-8 bytes of every term in one array in
     * term order, term `i` at `bytes[offs(i), offs(i + 1))`, with termIds and
-    * summed dfs alongside. Lookup is a binary search; expansion runs the
-    * matcher over the stored bytes, an offset view per term, with no copy
-    * and no per-term `UTF8String`. A regex with an [[anchoredPrefix]] scans
-    * only the term range that starts with it, which two binary searches
-    * find; every other expansion scans the whole dict.
+    * summed dfs alongside, and a [[Trigrams]] index over the same bytes,
+    * built on the first literal query that uses it, so a dict that only
+    * serves lookups, regexes or short patterns never holds one. Lookup is
+    * a binary search. Expansion picks candidate term indexes, then
+    * runs the matcher over the stored bytes of each candidate, an offset
+    * view per term, with no copy and no per-term `UTF8String`. The
+    * candidates are:
+    *  - for a literal query whose every pattern is at least 3 UTF-8 bytes:
+    *    the union over its patterns of the terms holding all of the
+    *    pattern's trigrams (ASCII-folded, so one index serves both case
+    *    modes), a superset of the matches;
+    *  - for a regex with an [[anchoredPrefix]]: the term range that starts
+    *    with it, which two binary searches find;
+    *  - for any other query: the whole dict.
     */
   final class Resident private (bytes: Array[Byte], offs: Array[Int],
       ids: Array[Long], dfs: Array[Long]) extends TermDict {
 
     def size: Int = ids.length
+
+    private lazy val grams = Trigrams.of(bytes, offs)
 
     private def term(i: Int): String =
       new String(bytes, offs(i), offs(i + 1) - offs(i), UTF_8)
@@ -150,24 +163,33 @@ object TermDict {
       lo
     }
 
-    /** Indexes of the terms `params` matches, ascending. */
+    /** Indexes of the terms `params` matches, ascending: the matcher over
+      * each candidate, `cand(k)` for `k < n`, or `from + k` when `cand` is
+      * null (a term range).
+      */
     private def matching(params: KrepParams): Array[Int] = {
       val m = new KrepMatcher(params)
-      val (from, until) = anchoredPrefix(params) match {
-        case Some(p) =>
-          val b = p.getBytes(UTF_8)
-          val range = (bound(b, strict = false), bound(b, strict = true))
-          // compile the regex even when no term is in range, so a malformed
-          // one fails here as it does on a full scan
-          if (range._1 == range._2) m.contains(Array.emptyByteArray, 0, 0)
-          range
-        case None => (0, size)
+      val pats = params.patterns.map(_.getBytes(UTF_8))
+      var cand: Array[Int] = null
+      var from = 0
+      var n = size
+      if (!params.regex && pats.forall(_.length >= Trigrams.Q)) {
+        cand = grams.candidates(pats)
+        n = cand.length
+      } else anchoredPrefix(params).foreach { p =>
+        val b = p.getBytes(UTF_8)
+        from = bound(b, strict = false)
+        n = bound(b, strict = true) - from
+        // compile the regex even when no term is in range, so a malformed
+        // one fails here as it does on a full scan
+        if (n == 0) m.contains(Array.emptyByteArray, 0, 0)
       }
       val hits = Array.newBuilder[Int]
-      var i = from
-      while (i < until) {
+      var k = 0
+      while (k < n) {
+        val i = if (cand == null) from + k else cand(k)
         if (m.contains(bytes, offs(i), offs(i + 1))) hits += i
-        i += 1
+        k += 1
       }
       hits.result()
     }
@@ -209,6 +231,123 @@ object TermDict {
       java.util.Arrays.sort(terms, byBytes)
       new Resident(terms.flatMap(_._1),
         terms.scanLeft(0)(_ + _._1.length), terms.map(_._2._1), terms.map(_._2._2))
+    }
+  }
+
+  /** Trigram index over the terms of a [[Resident]] dict (Russ Cox,
+    * "Regular Expression Matching with a Trigram Index"): for every
+    * distinct ASCII-folded 3-byte key, the ascending indexes of the terms
+    * whose folded bytes hold it. Laid out in CSR form as three flat arrays:
+    * the sorted distinct `keys`, and key `k`'s terms at
+    * `terms[offs(k), offs(k + 1))`.
+    */
+  private final class Trigrams(keys: Array[Int], offs: Array[Int],
+      terms: Array[Int]) {
+
+    /** Ascending indexes of the terms that hold every trigram of at least
+      * one of `patterns` (each at least [[Trigrams.Q]] bytes): a superset of
+      * the terms holding a pattern, in either case mode.
+      */
+    def candidates(patterns: Seq[Array[Byte]]): Array[Int] = {
+      val all = patterns.toArray.flatMap(allOf)
+      java.util.Arrays.sort(all)
+      var n = 0
+      var i = 0
+      while (i < all.length) {
+        if (n == 0 || all(i) != all(n - 1)) { all(n) = all(i); n += 1 }
+        i += 1
+      }
+      java.util.Arrays.copyOf(all, n)
+    }
+
+    /** The terms holding every trigram of `p`: their posting lists
+      * intersected shortest first, stopping once the result is empty.
+      */
+    private def allOf(p: Array[Byte]): Array[Int] = {
+      val lists = new Array[Int](p.length - Trigrams.Q + 1)
+      var j = 0
+      while (j < lists.length) {
+        val k = java.util.Arrays.binarySearch(keys, Trigrams.key(p, j))
+        if (k < 0) return Array.emptyIntArray
+        lists(j) = k
+        j += 1
+      }
+      val byLen = lists.distinct.sortBy(k => offs(k + 1) - offs(k))
+      val out = java.util.Arrays.copyOfRange(terms, offs(byLen(0)), offs(byLen(0) + 1))
+      var n = out.length
+      j = 1
+      while (j < byLen.length && n > 0) {
+        n = intersect(out, n, offs(byLen(j)), offs(byLen(j) + 1))
+        j += 1
+      }
+      java.util.Arrays.copyOf(out, n)
+    }
+
+    /** Keep the first `n` of `cand` that are in `terms[from, until)`, in
+      * place; both are ascending. Returns how many were kept.
+      */
+    private def intersect(cand: Array[Int], n: Int, from: Int, until: Int): Int = {
+      var kept = 0
+      var lo = from
+      var i = 0
+      while (i < n && lo < until) {
+        val at = java.util.Arrays.binarySearch(terms, lo, until, cand(i))
+        if (at >= 0) { cand(kept) = cand(i); kept += 1; lo = at + 1 }
+        else lo = -at - 1
+        i += 1
+      }
+      kept
+    }
+  }
+
+  private object Trigrams {
+
+    /** Gram length in bytes. */
+    val Q = 3
+
+    /** The folded trigram of `b` at `at`, as a 24-bit key. */
+    def key(b: Array[Byte], at: Int): Int =
+      (AsciiFold.fold(b(at)) & 0xff) << 16 |
+        (AsciiFold.fold(b(at + 1)) & 0xff) << 8 |
+        AsciiFold.fold(b(at + 2)) & 0xff
+
+    /** The index of the terms `bytes[offs(i), offs(i + 1))`: every (key,
+      * term) pair packed into one long, sorted, and deduplicated into CSR.
+      */
+    def of(bytes: Array[Byte], offs: Array[Int]): Trigrams = {
+      val size = offs.length - 1
+      var total = 0
+      var i = 0
+      while (i < size) { total += math.max(0, offs(i + 1) - offs(i) - Q + 1); i += 1 }
+      val pairs = new Array[Long](total)
+      var p = 0
+      i = 0
+      while (i < size) {
+        var at = offs(i)
+        while (at + Q <= offs(i + 1)) {
+          pairs(p) = key(bytes, at).toLong << 32 | i
+          p += 1
+          at += 1
+        }
+        i += 1
+      }
+      java.util.Arrays.sort(pairs)
+      val keys = Array.newBuilder[Int]
+      val starts = Array.newBuilder[Int]
+      val terms = new Array[Int](total)
+      var n = 0
+      p = 0
+      while (p < total) {
+        if (p == 0 || pairs(p) != pairs(p - 1)) {
+          val k = (pairs(p) >>> 32).toInt
+          if (p == 0 || k != (pairs(p - 1) >>> 32).toInt) { keys += k; starts += n }
+          terms(n) = pairs(p).toInt
+          n += 1
+        }
+        p += 1
+      }
+      starts += n
+      new Trigrams(keys.result(), starts.result(), java.util.Arrays.copyOf(terms, n))
     }
   }
 

@@ -1,9 +1,32 @@
 package graft.index
 
+import java.net.URI
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Local files under the `racefs` scheme. The first delete of a snapshot
+  * file after [[RaceFileSystem.onSnapshotDelete]] is set runs it first: a
+  * commit that lands while `expireSnapshots` deletes.
+  */
+class RaceFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("racefs:///")
+  override def getScheme: String = "racefs"
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    if (p.getName.matches("snapshot-[0-9]+\\.json")) {
+      val hook = RaceFileSystem.onSnapshotDelete.getAndSet(null)
+      if (hook != null) hook()
+    }
+    super.delete(p, recursive)
+  }
+}
+
+object RaceFileSystem {
+  val onSnapshotDelete = new AtomicReference[() => Unit]
+}
 
 class IceTableSpec extends AnyFunSuite {
 
@@ -159,5 +182,27 @@ class IceTableSpec extends AnyFunSuite {
     // survivor's stays readable
     assert(ice.manifestCount == 1)
     assert(ice.completedSteps("t").files == Seq(("v3.parquet", 3L)))
+  }
+
+  test("expireSnapshots keeps a manifest that a snapshot committed during its deletes shares") {
+    val conf = new Configuration()
+    conf.set("fs.racefs.impl", classOf[RaceFileSystem].getName)
+    conf.setBoolean("fs.racefs.impl.disable.cache", true)
+    val root = "racefs://" + Files.createTempDirectory("ice-race-").toString
+    val ice = new IceTable(root, conf)
+    ice.commitStep(StepInfo("t", "pt", 1, Seq(("v1.parquet", 1L)), Map.empty))
+    ice.commitStep(StepInfo("t", "pt", 2, Seq(("v2.parquet", 2L)), Map.empty))
+    ice.commitStep(StepInfo("t", "pt", 3, Seq(("v3.parquet", 3L)), Map.empty))
+    // a writer commits snapshot 3 between the deletes of expired snapshots
+    // 0 and 1; it lists v1 again, so it reuses snapshot 0's filesRef
+    RaceFileSystem.onSnapshotDelete.set(() =>
+      ice.commitStep(StepInfo("t", "pt", 1, Seq(("v1.parquet", 1L)), Map.empty)))
+    assert(ice.expireSnapshots(keepLast = 1) == Seq(0L, 1L))
+    assert(RaceFileSystem.onSnapshotDelete.get == null, "the commit never ran")
+    assert(ice.currentSnapshotId.contains(3L))
+    // v1's manifest survives for snapshot 3, v3's for snapshot 2
+    assert(ice.manifestCount == 2)
+    assert(ice.completedSteps("t").files == Seq(("v1.parquet", 1L)))
+    assert(ice.stepsAt(2L)("t").files == Seq(("v3.parquet", 3L)))
   }
 }

@@ -37,16 +37,16 @@ class OpsSpec extends AnyFunSuite {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
     val old = df.select($"id",
-        TextOps.shingleHashesPoly($"text").as("hs"),
+        HofOracles.shingleHashesPoly($"text").as("hs"),
         TextOps.shingles($"text", 3).as("sh_old"),
-        TextOps.hashedTermFreqsPoly($"text").as("htf"))
+        HofOracles.hashedTermFreqsPoly($"text").as("htf"))
       .select($"id",
-        TextOps.minhashPolyFromHashes($"hs", k = 32).as("sig_old"),
+        HofOracles.minhashPolyFromHashes($"hs", k = 32).as("sig_old"),
         $"sh_old",
-        TextOps.simhash31FromHashedTf($"htf").as("simhash_old"))
+        HofOracles.simhash31FromHashedTf($"htf").as("simhash_old"))
       .select($"id", $"sig_old", $"sh_old", $"simhash_old",
         array((0 until 8).map(b =>
-          TextOps.bandHashPoly($"sig_old", b, 4)): _*).as("bands_old"))
+          HofOracles.bandHashPoly($"sig_old", b, 4)): _*).as("bands_old"))
     val fused = df.select($"id",
       TextOps.minhashShingleSigPoly($"text", k = 32).as("sig_new"),
       TextOps.shinglesKernel($"text", 3).as("sh_new"),
@@ -175,9 +175,9 @@ class OpsSpec extends AnyFunSuite {
     val unrelated = "alpha beta gamma delta epsilon zeta eta theta iota " * 8
     val df = Seq((1L, base), (2L, nearDup), (3L, unrelated), (4L, base))
       .toDF("id", "text")
-      .select($"id", TextOps.hashedTermFreqs($"text").as("htf"))
+      .select($"id", HofOracles.hashedTermFreqs($"text").as("htf"))
       .persist()
-      .select($"id", TextOps.simhash64FromHashedTf($"htf").as("sh"))
+      .select($"id", HofOracles.simhash64FromHashedTf($"htf").as("sh"))
     val sh = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(sh(1L) == sh(4L), "identical text must hash identically")

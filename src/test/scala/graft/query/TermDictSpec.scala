@@ -1,5 +1,6 @@
 package graft.query
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
@@ -151,9 +152,9 @@ class TermDictSpec extends AnyFunSuite {
     assert(TermDict.anchoredPrefix(KrepParams(Seq("^ab"))).isEmpty)
   }
 
-  /** The resident expansion before prefix ranges: the matcher over every
-    * term in term order, then the df cut (a stable sort keeps term order
-    * among equal dfs).
+  /** The resident expansion before prefix ranges and the trigram index:
+    * the matcher over every merged term in term order, then the df cut (a
+    * stable sort keeps term order among equal dfs).
     */
   private def fullScanExpand(params: KrepParams, maxExpand: Int): Seq[String] = {
     val m = new KrepMatcher(params)
@@ -192,6 +193,50 @@ class TermDictSpec extends AnyFunSuite {
     // its prefix range
     intercept[java.util.regex.PatternSyntaxException](
       resident.expand(KrepParams(Seq("^zzqqx["), regex = true), 10))
+  }
+
+  /** Patterns of 0–8 UTF-8 bytes: dict-term substrings (hits), their
+    * upper-cased variants, multibyte UTF-8 and random ASCII bytes.
+    */
+  private lazy val byteLenGen: Gen[String] = Gen.choose(0, 8).flatMap { len =>
+    val sub = Gen.oneOf(terms.filter(_.length >= len)).flatMap(t =>
+      Gen.choose(0, t.length - len).map(f => t.substring(f, f + len)))
+    val multibyte = Gen.listOfN(len, Gen.oneOf('a', 'e', 'r', 'é', 'ß', '中', '€'))
+      .map(cs => cs.scanLeft("")(_ + _).takeWhile(_.getBytes(UTF_8).length <= len).last)
+    val random = Gen.listOfN(len, Gen.choose(1, 127).map(_.toChar)).map(_.mkString)
+    Gen.frequency(6 -> sub, 2 -> sub.map(_.toUpperCase), 1 -> multibyte, 1 -> random)
+  }
+
+  test("expand and matchingTermIds == a full scan, trigram path or not") {
+    val cases = sample(for {
+      ps <- Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, byteLenGen))
+      cs <- Gen.oneOf(true, false)
+      ww <- Gen.frequency(3 -> false, 1 -> true)
+      mc <- Gen.frequency(5 -> Long.MaxValue, 1 -> 0L)
+      cap <- capGen
+    } yield (ps, cs, ww, mc, cap), 400, 6L)
+    // just below and at the 3-byte threshold, alone and mixed
+    val edge = terms.filter(_.length >= 4).take(40).flatMap { t =>
+      Seq(Seq(t.take(2)), Seq(t.take(3)), Seq(t.substring(1, 4)), Seq(t.take(3), t.take(2)))
+    }.map(ps => (ps, true, false, Long.MaxValue, 1024))
+    var indexed, indexedHits, below = 0
+    (cases ++ edge).foreach { case (ps, cs, ww, mc, cap) =>
+      val params = KrepParams(ps, caseSensitive = cs, wholeWord = ww, maxCount = mc)
+      val want = fullScanExpand(params, cap)
+      assert(resident.expand(params, cap).toSeq == want,
+        s"$ps cs=$cs ww=$ww maxCount=$mc cap=$cap")
+      if (ps.forall(_.getBytes(UTF_8).length >= 3)) {
+        indexed += 1
+        if (want.nonEmpty) indexedHits += 1
+      } else below += 1
+    }
+    // matchingTermIds: case-sensitive literal containment
+    (cases.map(_._1) ++ edge.map(_._1)).foreach { ps =>
+      val want = fullScanExpand(KrepParams(ps), Int.MaxValue).map(oracle(_)._1).sorted
+      assert(resident.matchingTermIds(ps).toSeq == want, s"matchingTermIds $ps")
+    }
+    assert(indexedHits > 50 && below > 50,
+      s"indexed $indexed ($indexedHits with hits), below the threshold $below")
   }
 
   test("hotTerms: same top-k in both, including a hot set beyond HotTermCap") {
