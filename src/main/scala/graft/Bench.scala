@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 
 import graft.corpus.SynthWebText
 import graft.index.{IndexBuilder, IndexConfig}
@@ -131,7 +132,7 @@ object Bench {
   private def engineBenchAt(spark: SparkSession, root: String, path: String,
       nDocs: Long, partitions: Int, repeats: Int): EngineBenchResult = {
     import spark.implicits._
-    val pages = spark.read.parquet(path).as[graft.corpus.Page]
+    val pages = GraftParquet.read(spark, path).as[graft.corpus.Page]
     val t0 = System.nanoTime()
     new IndexBuilder(spark, root, IndexConfig(partitions = partitions))
       .build(pages)
@@ -239,7 +240,7 @@ object Bench {
     // classloading is a one-time JVM cost that otherwise lands entirely on
     // the alphabetically-first query (observed: ann_cosine_topk "4.8 s" for
     // a 2000-row scan, ~5 s of which was warmup)
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    GraftParquet.read(spark, s"$sfDir/region.parquet").count()
 
     // the shared EntryQueries index is a one-time cost every index-mode
     // query amortizes; built HERE so it is its own metric below instead of

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 
 import graft.app.EntryQueries
 
@@ -15,8 +16,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val docs = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs =
+      GraftParquet.read(spark, "/root/testdata/sf0.001/documents.parquet")
     val pages = docs.select(
       format_string("doc%08d", $"doc_id").as("url"),
       lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("warc_ts"),

@@ -1,6 +1,7 @@
 package graft.app
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
 
 import graft.krep.{KrepParams, functions => K}
@@ -17,7 +18,7 @@ import graft.query.Bm25Df
 object EntryQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    GraftParquet.read(s, s"$dir/$name.parquet")
 
   /** One inverted index per sf dir, built lazily and shared by the three
     * index-mode queries (phrase / multi-pattern / regex) — the driver runs

@@ -1,6 +1,7 @@
 package graft.app
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 
 import graft.corpus.{Page, SynthWebText}
 import graft.index.{IndexBuilder, IndexConfig}
@@ -30,7 +31,7 @@ object IndexBuild {
 
     val partitions = opts.getOrElse("partitions", "32").toInt
     val pages: Dataset[Page] = opts.get("pages") match {
-      case Some(path) => spark.read.parquet(path).as[Page]
+      case Some(path) => GraftParquet.read(spark, path).as[Page]
       case None =>
         SynthWebText.pages(spark, opts("synth").toLong, numPartitions = partitions)
     }

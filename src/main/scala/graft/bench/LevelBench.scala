@@ -1,6 +1,7 @@
 package graft.bench
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 
 import graft.Bench
 
@@ -53,7 +54,7 @@ object LevelBench {
 
     // JIT/classloader warmup + page-cache warm of the input
     Bench.engineBench(spark, 2000L, cpus, repeats = 1)
-    spark.read.parquet(pagesPath).selectExpr("sum(octet_length(html))").collect()
+    GraftParquet.read(spark, pagesPath).selectExpr("sum(octet_length(html))").collect()
     // untimed full-scale warm pass(es); the timed leg below then measures
     // steady state (each pass builds into its own fresh temp root)
     (1 to warmBuilds).foreach { _ =>

@@ -8,6 +8,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 
 /** One committed build step: table location + per-partition lineage (the
   * parquet files a step produced, with per-file row counts read back from the
@@ -188,9 +189,11 @@ final class IceTable(val root: String, conf: Configuration) {
       .flatMap(s => s.files.map { case (name, _) => s"${s.table}/$name" })
 
   /** Snapshot-isolated read of a committed table: loads exactly the file
-    * list the current snapshot recorded (never a live directory listing).
-    * Falls back to the directory for a committed-but-empty table, where the
-    * parquet footer in the directory carries the schema.
+    * list the current snapshot recorded (never a live directory listing),
+    * with the schema read from the first file's footer on the driver
+    * ([[GraftParquet.read]]), so resolving the table starts no Spark job. A
+    * committed-but-empty table lists no file: the empty schema-carrier file
+    * at the top of its directory supplies the schema, the same way.
     */
   def readTable(spark: org.apache.spark.sql.SparkSession, name: String)
       : org.apache.spark.sql.DataFrame = readSteps(spark, completedSteps, name)
@@ -204,11 +207,11 @@ final class IceTable(val root: String, conf: Configuration) {
       : org.apache.spark.sql.DataFrame = {
     val s = steps(name)
     val files = s.files.map { case (f, _) => s"${s.table}/$f" }
-    if (files.nonEmpty) spark.read.parquet(files: _*)
+    if (files.nonEmpty) GraftParquet.read(spark, files: _*)
     // committed-but-empty table: the directory supplies only the SCHEMA —
     // limit(0) guarantees orphan files from a crashed append contribute no
     // rows (the committed content is empty by definition)
-    else spark.read.parquet(s.table).limit(0)
+    else GraftParquet.read(spark, s.table).limit(0)
   }
 
   /** Commit a step: new snapshot = parent steps ± this step, written to the

@@ -3,6 +3,7 @@ package graft.index
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -187,7 +188,7 @@ final class IndexBuilder(spark: SparkSession, root: String,
   def loadStats(): IndexStats = {
     // builder-internal: reads the stats table THIS build just wrote, before
     // its commit — a snapshot-isolated read would not see it yet
-    val r = spark.read.parquet(ice.tablePath("stats")).head()
+    val r = GraftParquet.read(spark, ice.tablePath("stats")).head()
     IndexStats(r.getLong(0), r.getDouble(1))
   }
 }

@@ -1,6 +1,7 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
 
 /** Index maintenance: compaction of streaming-append debris.
@@ -152,7 +153,7 @@ final class IndexCompactor(spark: SparkSession, root: String,
     if (fragmented.isEmpty) return ice.currentSnapshotId.get
 
     val fragPaths = fragmented.toSeq.sorted.map(n => s"${ice.tablePath("postings")}/$n")
-    val tag = reencode(spark.read.parquet(fragPaths: _*))
+    val tag = reencode(GraftParquet.read(spark, fragPaths: _*))
     commitRewrite("postings", tag, fragmented, Map("compacted" -> "selective"))
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -133,10 +134,10 @@ final class StreamingIndexer(spark: SparkSession, root: String,
 
     corpusRows(ranked).write.parquet(deltaDir("corpus"))
     // read the delta back once: corpus/docs/tfrows/postings all derive from it
-    val corpusDeltaC = spark.read.parquet(deltaDir("corpus"))
+    val corpusDeltaC = GraftParquet.read(spark, deltaDir("corpus"))
     docRows(corpusDeltaC).write.parquet(deltaDir("docs"))
     tfRows(corpusDeltaC).write.parquet(deltaDir("tfrows"))
-    val tfDeltaC = spark.read.parquet(deltaDir("tfrows"))
+    val tfDeltaC = GraftParquet.read(spark, deltaDir("tfrows"))
 
     crash("dict")
     // dict DELTA (Lucene-style per-segment dictionary): the batch writes
@@ -163,7 +164,7 @@ final class StreamingIndexer(spark: SparkSession, root: String,
           $"df", $"cf")
       known.unionByName(newTerms).write.parquet(deltaDir("dict"))
     } finally withIds.unpersist(false)
-    val dictDelta = spark.read.parquet(deltaDir("dict"))
+    val dictDelta = GraftParquet.read(spark, deltaDir("dict"))
     val nextTermIdAfter = math.max(nextTermId, maxTermIdPlusOne(dictDelta))
 
     // postings delta: the batch build's write path over the batch's own
